@@ -88,6 +88,9 @@ object Bench {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
     if (files.isEmpty) return sfDir
     val dst = java.nio.file.Files.createTempDirectory("graft-bench-sf").toFile
+    // backstop for an aborted run (signal, System.exit); a normal or
+    // failing run deletes the copy in main's finally
+    sys.addShutdownHook(deleteRecursively(dst))
     files.foreach { f =>
       val block = math.max(64L * 1024, f.length() * 3 / math.max(cpus, 1))
       spark.read.parquet(f.getPath)
@@ -124,6 +127,14 @@ object Bench {
     // every timed query below reads this copy; sfDir itself is still
     // what the JSON reports as "sf" (it names the scale factor)
     val benchDir = relayoutFixtures(spark, sfDir, cpus)
+    try run(spark, sfDir, benchDir)
+    finally {
+      spark.stop()
+      if (benchDir != sfDir) deleteRecursively(new java.io.File(benchDir))
+    }
+  }
+
+  private def run(spark: SparkSession, sfDir: String, benchDir: String): Unit = {
     // single-threaded codec JIT warm-up: a 32-thread flood into
     // interpreted codec code starves the C2 compiler threads (the
     // round-14 find — see Multimodal.warmCodecPaths); each codec
@@ -257,7 +268,5 @@ object Bench {
       s""""steady_baseline_twins":${num2(totalBaseline)},""" +
       s""""fixture_relayout":${benchDir != sfDir},""" +
       s""""metric":"total","value":${num(total)},"unit":"sec","runs":$Runs,"sf":"$sfDir"}""")
-    spark.stop()
-    if (benchDir != sfDir) deleteRecursively(new java.io.File(benchDir))
   }
 }

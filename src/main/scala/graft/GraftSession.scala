@@ -60,6 +60,15 @@ object GraftSession {
       // multiple column families
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // Changelog commits: a micro-batch commit writes only the keys it
+      // changed, instead of zipping and uploading a full snapshot of
+      // every partition's store on every commit — that synchronous
+      // upload was most of a small micro-batch's state-store time.
+      // A snapshot is still taken every `minDeltasForSnapshot` (10)
+      // versions and uploaded by the maintenance thread; recovery
+      // loads the latest snapshot and replays the changelogs after it.
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true")
       // Scan-split floor (r15). maxSplitBytes = min(maxPartitionBytes,
       // max(openCostInBytes, totalBytes/minPartitionNum)) — the default
       // 4 MiB openCost means any file under ~4 MiB scans as ONE task no

@@ -49,7 +49,7 @@ object SparkEntry {
     */
   val baselineQueries: Map[String, String] = Map(
     "dedup_minhash_recall" -> "dedup_minhash_recall_sample", // full banding audit: exact side is the uncapped gram self-join, quadratic on clone-degenerate corpora
-    "dedup_ngram_jaccard"  -> "dedup_ngram_prefix",          // brute inverted-index Jaccard; prefix-filtered form is output-identical at the 0.8 threshold
+    "dedup_ngram_jaccard"  -> "dedup_ngram_prefix_capped",   // brute inverted-index Jaccard; the df-capped prefix join equals it where the cap does not bind, and a subset with exact Jaccards where it does
     "dedup_semantic"       -> "dedup_semantic_capped",       // uncapped SemDeDup baseline; capped form bounds per-bucket fan-out
     "sim_near_dup"         -> "sim_near_dup_lsh",            // brute all-pairs cosine twin; LSH bucket join is the scale path
     "q27_range_join"       -> "q27_range_join_bucketed",     // interval join keyed per user: candidates quadratic in per-user activity

@@ -502,15 +502,20 @@ object Similarity {
     */
   private def assignAgainst(e: DataFrame, cents: DataFrame): DataFrame = {
     val i6 = floor(col("ccos") * lit(1000000d) + lit(0.5)).cast("long")
+    // a zero-norm vector or centroid gives a NULL ccos (try_divide, so
+    // the guard below reports it instead of a bare DIVIDE_BY_ZERO) and
+    // a NaN component a NaN one, which floor would turn into 0 and rank
+    // silently; both take the raise_error arm
     val pack = when(col("cid").between(0L, AssignKidUnit - 1) &&
-          i6.between(-1000001L, 1000001L),
+          !isnan(col("ccos")) && i6.between(-1000001L, 1000001L),
         (lit(1000001L) - i6) * lit(AssignKidUnit) + col("cid"))
       .otherwise(raise_error(concat(
         lit("assignAgainst: cid/ccos outside packed range " +
-          "(cid < 2^38, |ccos| <= 1): "), col("cid").cast("string"))))
+          "(cid < 2^38, |ccos| <= 1, ccos not NULL or NaN): "),
+        col("cid").cast("string"))))
     e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cid"),
-        (dot(col("v"), col("cv")) / (col("nrm") * col("cnrm"))).as("ccos"))
+        try_divide(dot(col("v"), col("cv")), col("nrm") * col("cnrm")).as("ccos"))
       .select(col("vec_id"), col("cid"), col("ccos"), pack.as("p"))
       .groupBy(col("vec_id"))
       .agg(min_by(col("cid"), col("p")).as("cid"),

@@ -22,29 +22,53 @@ import graft.operators.Dedup
   * exactly the pairs the batch equi-join on (band, sig) produces
   * UNDER THE SAME GEOMETRY (the batch plan adapts its banding to the
   * corpus size; the stream pins its geometry at start — see
-  * [[candidatePairs]]). A pair colliding in several bands is emitted once per
-  * colliding bucket; the downstream `dropDuplicatesWithinWatermark`
-  * collapses them to the batch twin's `.distinct()`.
+  * [[candidatePairs]]).
   *
-  * Scale contract: state per bucket is the doc ids + timestamps of
-  * the bucket's members WITHIN the watermark horizon — members whose
-  * event time has fallen behind the watermark are evicted on the
-  * next touch of that bucket, and an event-time timer (armed at 1 ms
-  * past the bucket's newest member) clears buckets that are never
-  * touched again, so state is O(docs in horizon), never O(corpus) —
-  * including on a mostly-unique stream where most buckets are seen
-  * exactly once. Documents themselves never enter state (only 8-byte
-  * ids + timestamps); the pair stream is the candidate surface, and
-  * exact Jaccard verification stays a batch join downstream, as in
+  * Exactly once: a pair is emitted ONLY from the lowest band in which
+  * its two documents collide. Every band row carries the signatures
+  * of the bands below its own, and a bucket of band k pairs two
+  * documents only when none of their bands 0..k-1 match — compared as
+  * the signature strings themselves, never a hash, so no true pair
+  * can be lost to a collision. The buckets of one document pair agree
+  * on membership (eviction is by the same watermark everywhere), so
+  * the lowest colliding bucket always sees the pair, and the batch
+  * twin's `.distinct()` needs no shuffle or dedup state downstream.
+  *
+  * Scale contract: state per bucket is the doc ids, timestamps and
+  * lower-band signatures of the bucket's members WITHIN the watermark
+  * horizon — members whose event time has fallen behind the
+  * watermark are evicted on the next touch of that bucket, and an
+  * event-time timer (armed at 1 ms past the bucket's newest member)
+  * clears buckets that are never touched again, so state is O(docs in
+  * horizon), never O(corpus) — including on a mostly-unique stream
+  * where most buckets are seen exactly once. Documents themselves
+  * never enter state (only ids, timestamps and band signatures); the
+  * pair stream is the candidate surface, and exact Jaccard
+  * verification stays a batch join downstream, as in
   * `Dedup.dropList`. The standard trade applies: near-dups farther
   * apart in event time than the horizon fall back to the batch
   * sweep.
+  *
+  * Checkpoints written before the lowest-band rule (with a trailing
+  * dedup operator and the two-field `Member`) cannot be resumed.
   */
 object NearDedup {
 
-  case class BandArrival(doc_id: Long, band: Long, sig: String, ts: Timestamp)
-  case class Member(doc_id: Long, tsMillis: Long)
+  /** `lower`: the document's signatures of bands 0 until `band`. */
+  case class BandArrival(doc_id: Long, band: Long, sig: String,
+                         lower: Seq[String], ts: Timestamp)
+  case class Member(doc_id: Long, tsMillis: Long, lower: Seq[String])
   case class CandidatePair(doc_a: Long, doc_b: Long, ts: Timestamp)
+
+  // built once per JVM, not per task: `Encoders.product` is Scala
+  // reflection over the case class
+  private val MemberEncoder = Encoders.product[Member]
+
+  /** True when two documents also collide in a band below this one,
+    * whose bucket then owns the pair.
+    */
+  private def collideBelow(a: Seq[String], b: Seq[String]): Boolean =
+    a.lazyZip(b).exists(_ == _)
 
   class Processor
       extends StatefulProcessor[(Long, String), BandArrival, CandidatePair] {
@@ -53,7 +77,7 @@ object NearDedup {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       members = getHandle.getListState[Member](
-        "members", Encoders.product[Member], TTLConfig.NONE)
+        "members", MemberEncoder, TTLConfig.NONE)
 
     /** Event-time cleanup timer per bucket — when the watermark
       * passes every member, the bucket's state is CLEARED. Eviction-
@@ -97,11 +121,12 @@ object NearDedup {
       rows.toVector.sortBy(r => (r.ts.getTime, r.doc_id)).foreach { r =>
         if (!kept.exists(_.doc_id == r.doc_id)) {
           kept.foreach { m =>
-            out += CandidatePair(
-              math.min(m.doc_id, r.doc_id), math.max(m.doc_id, r.doc_id),
-              new Timestamp(math.max(m.tsMillis, r.ts.getTime)))
+            if (!collideBelow(m.lower, r.lower))
+              out += CandidatePair(
+                math.min(m.doc_id, r.doc_id), math.max(m.doc_id, r.doc_id),
+                new Timestamp(math.max(m.tsMillis, r.ts.getTime)))
           }
-          kept = kept :+ Member(r.doc_id, r.ts.getTime)
+          kept = kept :+ Member(r.doc_id, r.ts.getTime, r.lower)
         }
       }
       members.put(kept.toArray)
@@ -131,8 +156,8 @@ object NearDedup {
     }
   }
 
-  /** stream: (doc_id, text, ts). Emits distinct near-dup candidate
-    * pairs (doc_a < doc_b) with event time = the later document's.
+  /** stream: (doc_id, text, ts). Emits each near-dup candidate pair
+    * once (doc_a < doc_b) with event time = the later document's.
     *
     * `bandRows` pins the LSH geometry EXPLICITLY — the batch
     * `Dedup.minhashPairs` derives its geometry from the corpus size
@@ -162,9 +187,11 @@ object NearDedup {
 
   private def bandRowsOf(stream: DataFrame, bandRows: Int): DataFrame =
     Dedup.withBandKeys(stream, "text", bandRows)
-      .select(col("doc_id"), explode(col("bands")).as("bs"), col("ts"))
+      .select(col("doc_id"), col("bands.sig").as("sigs"),
+              posexplode(col("bands")).as(Seq("pos", "bs")), col("ts"))
       .select(col("doc_id"), col("bs.band").as("band"),
-              col("bs.sig").as("sig"), col("ts"))
+              col("bs.sig").as("sig"),
+              slice(col("sigs"), lit(1), col("pos")).as("lower"), col("ts"))
 
   private def pairs(banded: DataFrame): DataFrame = {
     val spark = banded.sparkSession
@@ -174,6 +201,5 @@ object NearDedup {
       .groupByKey(r => (r.band, r.sig))
       .transformWithState(new Processor, "ts", OutputMode.Append())
       .toDF()
-      .dropDuplicatesWithinWatermark("doc_a", "doc_b")
   }
 }

@@ -37,6 +37,8 @@ object StreamingAnomaly {
                         n_frame: Long, mean: Double, z: Double,
                         is_anomaly: Boolean)
 
+  private val HistoryEncoder = Encoders.product[History]
+
   private def pround4(x: Double): Double = math.floor(x * 1e4 + 0.5) / 1e4
 
   /** The batch query's arithmetic on a trailing frame; None when the
@@ -64,7 +66,7 @@ object StreamingAnomaly {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       hist = getHandle.getValueState[History](
-        "hist", Encoders.product[History], TTLConfig.NONE)
+        "hist", HistoryEncoder, TTLConfig.NONE)
 
     override def handleInputRows(
         typ: String,

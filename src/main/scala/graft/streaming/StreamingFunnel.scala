@@ -47,6 +47,8 @@ object StreamingFunnel {
     * placement keeps it out of the public query surface. */
   case class FunnelState(depth: Int, reachedMicros: Long)
 
+  private val FunnelStateEncoder = Encoders.product[FunnelState]
+
   /** The ordered steps; depth d waits for `Steps(d)`. */
   private val Steps = Array("view", "click", "purchase")
 
@@ -75,7 +77,7 @@ object StreamingFunnel {
         if (ttlIdleMs > 0) new TTLConfig(Duration.ofMillis(ttlIdleMs))
         else TTLConfig.NONE
       st = getHandle.getValueState[FunnelState](
-        "funnel", Encoders.product[FunnelState], ttl)
+        "funnel", FunnelStateEncoder, ttl)
     }
 
     override def handleInputRows(

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: the quality gate is a codegen'd per-row expression
   * (no state); exact dedup keys 16-byte md5 into RocksDB
   * ([[ContentDedup]]); near-dup detection signs survivors map-side
-  * and keeps only ids+timestamps per LSH bucket ([[NearDedup]]).
+  * and keeps only ids, timestamps and lower-band signatures per LSH
+  * bucket ([[NearDedup]]).
   * Document text never enters any state store, so state is
   * O(documents within the watermark horizon) at every stage.
   */

@@ -32,6 +32,8 @@ object StreamingScd2 {
   case class RunRow(user_id: Long, run_seq: Long, event_type: String,
                     n_events: Long, from_us: Long, to_us: Long)
 
+  private val RunStateEncoder = Encoders.product[RunState]
+
   /** Input event: (user_id, ts epoch µs, event_id, event_type). */
   type In = (Long, Long, Long, String)
 
@@ -41,7 +43,7 @@ object StreamingScd2 {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       run = getHandle.getValueState[RunState](
-        "run", Encoders.product[RunState], TTLConfig.NONE)
+        "run", RunStateEncoder, TTLConfig.NONE)
 
     override def handleInputRows(
         user: Long, rows: Iterator[In],

@@ -22,6 +22,8 @@ object StreamingTopK {
   case class Summary(terms: Seq[String], cnts: Seq[Long])
   case class TopKUpdate(shard: Long, rank: Int, term: String, cnt: Long)
 
+  private val SummaryEncoder = Encoders.product[Summary]
+
   private[streaming] def add(buf: mutable.HashMap[String, Long],
                              term: String, n: Long, capacity: Int): Unit =
     buf.get(term) match {
@@ -40,7 +42,7 @@ object StreamingTopK {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       summary = getHandle.getValueState[Summary](
-        "summary", Encoders.product[Summary], TTLConfig.NONE)
+        "summary", SummaryEncoder, TTLConfig.NONE)
 
     override def handleInputRows(
         shard: Long,

@@ -59,4 +59,22 @@ class IvfStateSpec extends AnyFunSuite {
     val direct = codes(cb)
     assert(direct.nonEmpty && codes(loaded) === direct)
   }
+
+  test("zero-norm and NaN vectors fail assignment with the packed-range error") {
+    import spark.implicits._
+    val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cid", "cv")
+    // a zero norm divides by zero; a NaN cosine floors to 0 and would
+    // otherwise rank as ccos = 0
+    for (bad <- Seq(Seq(0.0, 0.0), Seq(Double.NaN, 1.0))) {
+      val e = Seq((1L, Seq(0.6, 0.8)), (2L, bad)).toDF("vec_id", "v")
+        .withColumn("nrm",
+          sqrt(graft.functions.DotProduct.dot_product(col("v"), col("v"))))
+      val err = intercept[Exception](
+        Similarity.assignWithCentroids(e, cents).collect())
+      val messages = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(messages.exists(_.contains("assignAgainst:")),
+        s"$bad: expected the assignAgainst guard, got: ${messages.head}")
+    }
+  }
 }

@@ -68,10 +68,14 @@ class NearDedupSpec extends AnyFunSuite {
       q.processAllAvailable()
       in.addData(corpus.drop(3).map { case (id, t, s) => (id, t, ts(s)) })
       q.processAllAvailable()
-      val streamed = spark.table("nd_out").select("doc_a", "doc_b")
-        .as[(Long, Long)].collect().toSet
+      val emitted = spark.table("nd_out").select("doc_a", "doc_b")
+        .as[(Long, Long)].collect().toSeq
+      val streamed = emitted.toSet
       assert(streamed === batchPairs)
       assert(streamed.contains((1L, 2L)) && streamed.contains((1L, 4L)))
+      // exactly once: docs 1, 2 and 4 collide in all 8 bands, and each
+      // of their pairs comes out of the lowest band only
+      assert(emitted.size === streamed.size, s"repeated pairs: ${emitted.sorted}")
     } finally q.stop()
   }
 

@@ -36,6 +36,14 @@ class PlanContractSpec extends AnyFunSuite {
     assert(stray.isEmpty, s"oracles without queries: $stray")
   }
 
+  test("every baseline twin names a registered production-tier counterpart") {
+    val tier = SparkEntry.scaleClass
+    val bad = SparkEntry.baselineQueries.filter { case (baseline, prod) =>
+      !tier.get(baseline).contains("baseline") || !tier.get(prod).contains("production")
+    }
+    assert(bad.isEmpty, s"baseline -> counterpart not production-tier: $bad")
+  }
+
   test("no query buffers a full distribution (exact-percentile ban)") {
     // the built-in `percentile()` holds a group's entire value
     // distribution in one executor's aggregation buffer — the shape a
