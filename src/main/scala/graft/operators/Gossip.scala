@@ -23,10 +23,11 @@ import graft.sources.Tables
   * remote rumor never wins regardless of its counter, and equal
   * counters keep the local row.
   *
-  * Scale shape: both inputs are per-node membership aggregates, so the
-  * full-outer merge shuffles only (id, hb, time, alive) rows — never
-  * the underlying event volume; the heavy lifting is the map-side
-  * partial aggregation that builds each table.
+  * Scale shape: `merge_lww` builds both tables in one `events` scan
+  * and one aggregate on the node id (each side a conditional aggregate
+  * over its parity), so the rule runs with no join. The generic
+  * [[Gossip.mergeLeft]] keeps the full-outer join for two independent
+  * tables; it shuffles (id, hb, time, alive) rows, never events.
   */
 object Gossip {
 
@@ -37,26 +38,33 @@ object Gossip {
     */
   def mergeLeft(left: DataFrame, right: DataFrame,
                 currTimeUs: Long, failTimeoutSec: Long): DataFrame = {
-    val stale = left.withColumn("alive",
-      col("alive") &&
-        !(lit(currTimeUs) > col("ts_us") + lit(failTimeoutSec * 1000000L)))
-    val l = stale.select(col("id"),
-      struct(col("hb"), col("ts_us"), col("alive")).as("l"))
-    val r = right.select(col("id"),
-      struct(col("hb"), col("ts_us"), col("alive")).as("r"))
+    def side(t: DataFrame, name: String) = t.select(col("id"),
+      struct(col("hb"), col("ts_us"), col("alive")).as(name))
+    mergePaired(side(left, "l").join(side(right, "r"), Seq("id"), "full_outer"),
+      currTimeUs, failTimeoutSec)
+  }
+
+  /** The merge rule over rows (id, l, r) of (hb, ts_us, alive) structs,
+    * null where the key is absent on a side. The staleness-flipped local
+    * `alive` gates the revival rule and is what a winning local row emits.
+    */
+  private def mergePaired(paired: DataFrame,
+                          currTimeUs: Long, failTimeoutSec: Long): DataFrame = {
+    val stale = paired.withColumn("l", col("l").withField("alive",
+      col("l.alive") &&
+        !(lit(currTimeUs) > col("l.ts_us") + lit(failTimeoutSec * 1000000L))))
     val rightWins = col("r.alive") && (col("r.hb") > col("l.hb") ||
       (!col("l.alive") && col("r.hb") < col("l.hb")))
-    l.join(r, Seq("id"), "full_outer")
+    def won(f: String) =
+      when(col("winner") === "right", col(s"r.$f")).otherwise(col(s"l.$f"))
+    stale
       .withColumn("winner",
         when(col("l").isNull, lit("right"))
           .when(col("r").isNull, lit("left"))
           .when(rightWins, lit("right"))
           .otherwise(lit("left")))
-      .select(col("id").as("node_id"),
-        when(col("winner") === "right", col("r.hb")).otherwise(col("l.hb")).as("hb"),
-        when(col("winner") === "right", col("r.ts_us")).otherwise(col("l.ts_us")).as("last_us"),
-        when(col("winner") === "right", col("r.alive")).otherwise(col("l.alive")).as("alive"),
-        col("winner"))
+      .select(col("id").as("node_id"), won("hb").as("hb"),
+        won("ts_us").as("last_us"), won("alive").as("alive"), col("winner"))
   }
 
   // Deterministic merge scenario built from `events`: two membership
@@ -66,23 +74,34 @@ object Gossip {
   // exercised. "now" = 2024-01-31T00:00:00 (just past the data's max
   // ts), FAIL_TIMEOUT = 4 h — wide enough that both stale and fresh
   // left rows exist.
-  private[operators] val CurrTimeUs = 1706659200000000L
-  private[operators] val FailTimeoutSec = 14400L
-
-  private def membership(s: SparkSession, d: String, parity: Int): DataFrame =
-    Tables.events(s, d)
-      .filter(col("event_id") % 2 === parity)
-      .groupBy(col("user_id").as("id"))
-      .agg(count(lit(1)).as("hb"), max(unix_micros(col("ts"))).as("ts_us"))
-      .withColumn("alive", col("hb") % 3 =!= 0)
+  private[graft] val CurrTimeUs = 1706659200000000L
+  private[graft] val FailTimeoutSec = 14400L
 
   /** Shipped `merge_lww` query: MergeLeft of the two event-derived
     * membership tables.
     */
   def mergeLww(s: SparkSession, d: String): DataFrame =
-    mergeLeft(membership(s, d, 0), membership(s, d, 1),
-              CurrTimeUs, FailTimeoutSec)
-      .orderBy(col("node_id"))
+    mergeLwwOf(Tables.events(s, d))
+
+  /** [[mergeLww]] over an explicit events frame (spec entry): each
+    * parity's (hb, ts_us) is a conditional count/max in one aggregate,
+    * a side without events a null struct; a null node id is grouped
+    * per parity, since null keys never pair in a full-outer join.
+    */
+  private[graft] def mergeLwwOf(events: DataFrame): DataFrame = {
+    val parity = col("event_id") % 2
+    def member(p: Int) = {
+      val hb = count(when(parity === p, 1))
+      when(hb > 0, struct(hb.as("hb"),
+        max(when(parity === p, unix_micros(col("ts")))).as("ts_us"),
+        (hb % 3 =!= 0).as("alive")))
+    }
+    val paired = events.filter(parity === 0 || parity === 1)
+      .groupBy(col("user_id").as("id"),
+        when(col("user_id").isNull, parity).as("null_id_side"))
+      .agg(member(0).as("l"), member(1).as("r"))
+    mergePaired(paired, CurrTimeUs, FailTimeoutSec).orderBy(col("node_id"))
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "merge_lww" -> mergeLww _,

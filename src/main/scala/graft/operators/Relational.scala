@@ -45,20 +45,22 @@ object Relational {
         count(lit(1)).as("count_order"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
 
-  /** Star join: fact tables shuffle on their keys; `nation`/`region`
-    * are broadcast (25 / 5 rows — and still tiny at any SF).
+  /** Star join, one probe per fact row: lineitem probes one broadcast
+    * orders ⋈ customer map and aggregates on the integer nation key;
+    * `nation`/`region` join the ≤ 25 aggregated rows, re-summed by name.
     */
   def q2RevenueByNation(s: SparkSession, d: String): DataFrame = {
-    val c = Tables.customer(s, d); val o = Tables.orders(s, d)
-    val l = Tables.lineitem(s, d); val n = Tables.nation(s, d)
-    val r = Tables.region(s, d)
-    l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+    val orderNation = broadcast(Tables.orders(s, d)
+      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
+      .select(col("o_orderkey"), col("c_nationkey")))
+    Tables.lineitem(s, d).join(orderNation, col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("c_nationkey"))
+      .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"),
+           count(lit(1)).as("cnt"))
+      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"), col("n_name"))
-      .agg(pround(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-           count(lit(1)).as("n_items"))
+      .agg(pround(sum(col("rev")), 2).as("revenue"), sum(col("cnt")).as("n_items"))
       .orderBy(col("r_name"), col("n_name"))
   }
 

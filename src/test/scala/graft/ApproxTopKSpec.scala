@@ -13,7 +13,7 @@ import graft.functions.CrossEngine.tokens
 class ApproxTopKSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def refWords = spark.read.text("/root/reference/data/*.txt")
+  private def refWords = spark.read.text(ReferenceData.corpus)
     .select(explode(tokens(col("value"))).as("word"))
 
   test("presence guarantee on the reference corpus (26k distinct words)") {

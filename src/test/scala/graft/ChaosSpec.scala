@@ -26,7 +26,7 @@ import graft.operators.{Chaos, TextAnalytics}
 class ChaosSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  val corpus = "/root/reference/data/*.txt"
+  def corpus = ReferenceData.corpus
   val sf = "/root/testdata/sf0.001"
 
   /** Runs `body` while counting failed task attempts; returns

@@ -13,7 +13,7 @@ class MapReduceJobSpec extends AnyFunSuite {
 
   test("WordCountJob matches the TextAnalytics pipeline on the reference corpus") {
     import spark.implicits._
-    val corpus = "/root/reference/data/*.txt"
+    val corpus = ReferenceData.corpus
     val viaJob = WordCountJob.overFiles(spark, corpus)
       .toDF("word", "count")
     val viaPipeline = TextAnalytics.wordCount(TextAnalytics.documents(spark, corpus))

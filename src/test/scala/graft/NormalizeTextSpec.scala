@@ -38,7 +38,7 @@ class NormalizeTextSpec extends AnyFunSuite {
   }
 
   test("agrees with the regex normalizer on the whole reference corpus") {
-    val docs = spark.read.text("/root/reference/data/*.txt")
+    val docs = spark.read.text(ReferenceData.corpus)
       .withColumnRenamed("value", "text")
     val diff = docs.select(
         normalize_text(col("text")).as("fast"),

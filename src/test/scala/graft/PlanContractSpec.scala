@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -112,6 +115,30 @@ class PlanContractSpec extends AnyFunSuite {
     val plan = SparkEntry.queries("q2_revenue_by_nation")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
+  }
+
+  test("q2 probes one broadcast join per lineitem row and aggregates on c_nationkey") {
+    val plan = unwrap(SparkEntry.queries("q2_revenue_by_nation")(spark, sf)
+      .queryExecution.executedPlan)
+    def streamed(j: BroadcastHashJoinExec) =
+      if (j.buildSide == BuildRight) j.left else j.right
+    // true when `p` pipelines lineitem rows: no exchange or aggregate between
+    def streamsLineitem(p: SparkPlan): Boolean = p match {
+      case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.exists(_.getName == "lineitem.parquet")
+      case f: FilterExec => streamsLineitem(f.child)
+      case q: ProjectExec => streamsLineitem(q.child)
+      case j: BroadcastHashJoinExec => streamsLineitem(streamed(j))
+      case _ => false
+    }
+    val probes = plan.collect {
+      case j: BroadcastHashJoinExec if streamsLineitem(streamed(j)) => j
+    }
+    assert(probes.size == 1, s"lineitem must stream exactly one broadcast join:\n$plan")
+    val partial = plan.collect {
+      case a: HashAggregateExec if a.child.find(_ eq probes.head).nonEmpty => a
+    }.last // the innermost aggregate above the probe is the partial one
+    assert(partial.groupingExpressions.map(_.name) == Seq("c_nationkey"), partial)
   }
 
   test("dedup_simhash_pairs ships the blocked plan — no nested-loop join") {

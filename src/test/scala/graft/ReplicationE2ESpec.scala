@@ -16,12 +16,13 @@ class ReplicationE2ESpec extends AnyFunSuite {
 
   test("golden output replicates exactly-once with no gaps (W1-W7 e2e)") {
     import spark.implicits._
+    val golden = ReferenceData.golden
     val dir = java.nio.file.Files.createTempDirectory("repl_e2e").toString
 
     // leader side: the golden result as ID'd lines, split over several
     // files so the stream sees multiple source batches (W1)
     val lines = {
-      val src = scala.io.Source.fromFile("/root/reference/mr-out-final")(scala.io.Codec.UTF8)
+      val src = scala.io.Source.fromFile(golden)(scala.io.Codec.UTF8)
       try src.getLines().toVector finally src.close()
     }
     val ided = lines.zipWithIndex.map { case (l, i) => s"${i + 1}\t$l" }

@@ -38,7 +38,7 @@ class TokenizeWordsSpec extends AnyFunSuite {
   }
 
   test("agrees with the regex tokenizer on the whole reference corpus") {
-    val docs = spark.read.text("/root/reference/data/*.txt")
+    val docs = spark.read.text(ReferenceData.corpus)
       .withColumnRenamed("value", "text")
     val diff = docs.select(
         tokenize_words(col("text")).as("fast"),

@@ -11,8 +11,8 @@ import graft.operators.TextAnalytics
 class WordCountGoldenSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  val corpus = "/root/reference/data/*.txt"
-  val golden = "/root/reference/mr-out-final"
+  def corpus = ReferenceData.corpus
+  def golden = ReferenceData.golden
 
   lazy val expected: Array[String] = {
     val src = scala.io.Source.fromFile(golden)(scala.io.Codec.UTF8)

@@ -4,7 +4,13 @@
 #   tools/check_subset.sh <sfDir> <outDir> <q1,q2,...>
 set -e
 SF=$1; OUT=$2; QS=$3
-sbt -batch "runMain graft.Verify $SF $OUT $QS" >/dev/null 2>&1 || true
+mkdir -p "$OUT"
+LOG="$OUT/verify.log"
+if ! sbt -batch "runMain graft.Verify $SF $OUT $QS" >"$LOG" 2>&1; then
+  echo "check_subset: Verify failed; last lines of $LOG:" >&2
+  tail -n 40 "$LOG" >&2
+  exit 1
+fi
 python3 - "$OUT" "$QS" <<'EOF'
 import json, sys
 out, qs = sys.argv[1], set(sys.argv[2].split(','))
