@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
   *
-  * Local-mode defaults are tuned for the test harness (local[32],
-  * 32 shuffle partitions) but every setting here is what we would
-  * ship to a real cluster: AQE on (runtime partition coalescing +
+  * The builder defaults to `local[n, 4]` with n shuffle partitions,
+  * n = the available cores (`SPARK_GRAFT_CPUS` overrides; the tests
+  * use `local[4, 4]`), but every setting here is what we would ship
+  * to a real cluster: AQE on (runtime partition coalescing +
   * skew-join splitting), broadcast threshold left at default so
   * dimension tables broadcast automatically, UTC session time zone
   * for oracle parity.
@@ -69,6 +70,23 @@ object GraftSession {
       // loads the latest snapshot and replays the changelogs after it.
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
+      // Local checkpoint files without subprocesses. Without the native
+      // libhadoop (the bundled Hadoop client jars carry none),
+      // FileContext's rename forks `readlink` and every file or
+      // directory the local FileSystem creates forks `chmod` — about
+      // ten subprocesses per checkpoint file. Checkpoints on the local FileSystem below go through the
+      // FileSystem API instead (rename is File.renameTo); other paths
+      // keep Spark's FileContext default, because HDFS FileSystem.rename
+      // never overwrites and RocksDB re-commits a changelog with
+      // overwrite.
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.GraftCheckpointFileManager].getName)
+      // The `file:` FileSystem sets the same permission bits with an
+      // in-process chmod(2) instead of a `chmod` subprocess; checksums
+      // (.crc sidecars) and everything else are stock LocalFileSystem,
+      // whose rename replaces a file as the checkpoint manager needs.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.GraftLocalFileSystem].getName)
       // Scan-split floor (r15). maxSplitBytes = min(maxPartitionBytes,
       // max(openCostInBytes, totalBytes/minPartitionNum)) — the default
       // 4 MiB openCost means any file under ~4 MiB scans as ONE task no

@@ -93,15 +93,34 @@ class ReplicatedLogSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("repl").toString
     val in = MemoryStream[LogRecord]
-    val q = ReplicatedLog.start(in.toDF(), s"$dir/ckpt", s"$dir/out",
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    def start() = ReplicatedLog.start(in.toDF(), s"$dir/ckpt", s"$dir/out",
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    def sink(): Seq[(Long, String)] = spark.read.parquet(s"$dir/out")
+      .select("id", "value").as[(Long, String)].collect().sortBy(_._1).toSeq
+
+    val q1 = start()
     try {
       in.addData(LogRecord(1, "a", ts(100)), LogRecord(2, "b", ts(100)),
                  LogRecord(2, "dup", ts(100)))
-      q.awaitTermination(60000)
-      val rows = spark.read.parquet(s"$dir/out").select("id")
-        .as[Long].collect().sorted.toSeq
-      assert(rows == Seq(1L, 2L))
-    } finally if (q.isActive) q.stop()
+      q1.processAllAvailable()
+    } finally q1.stop()
+    val before = sink()
+    assert(before.map(_._1) == Seq(1L, 2L))
+
+    // restart on the same checkpoint, then re-send ids 1 and 2 (inside
+    // the watermark, so only the restored dedup state can drop them)
+    // together with new ids 3 and 4
+    val q2 = start()
+    try {
+      in.addData(LogRecord(2, "b-again", ts(101)), LogRecord(3, "c", ts(101)),
+                 LogRecord(1, "a-again", ts(101)), LogRecord(4, "d", ts(102)))
+      q2.processAllAvailable()
+      val batchIds = q2.recentProgress.map(_.batchId)
+      assert(batchIds.nonEmpty && batchIds.min >= 1,
+        s"the restarted query resumes after the checkpointed batches: $batchIds")
+    } finally q2.stop()
+    val rows = sink()
+    assert(rows.map(_._1) == Seq(1L, 2L, 3L, 4L), rows)
+    assert(rows.take(2) == before, "re-sent ids keep their first value")
   }
 }
