@@ -86,10 +86,10 @@ object SparkEntry {
   val scaleNotes: Map[String, String] = Map(
     "dedup_minhash_pairs"  -> "output-bound: the true near-dup pair set grows ~quadratically in the clone factor",
     "dedup_simhash_pairs"  -> "output-bound (same clone-pair growth) + Manku pigeonhole background term C(N,2)/2^16",
-    "dedup_audio"          -> "compute-bound map-side codec + blocked-Hamming background term; sampled-guard knob halves steady decode cost",
-    "dedup_image"          -> "compute-bound map-side PNG decode (x2 with the in-plan cross-decoder guard; knob: SPARK_GRAFT_CODEC_GUARD_MOD)",
-    "mm_decode"            -> "compute-bound map-side codec work, nothing amortizes (knob: SPARK_GRAFT_CODEC_GUARD_MOD)",
-    "mm_resize"            -> "compute-bound map-side codec + resample work (knob: SPARK_GRAFT_CODEC_GUARD_MOD)",
+    "dedup_audio"          -> "compute-bound map-side codec (x2 with the in-plan cross-decoder guard) + blocked-Hamming background term",
+    "dedup_image"          -> "compute-bound map-side PNG decode (x2 with the in-plan cross-decoder guard)",
+    "mm_decode"            -> "compute-bound map-side codec work (x2 with the in-plan cross-decoder guard), nothing amortizes",
+    "mm_resize"            -> "compute-bound map-side codec + resample work (x2 with the in-plan cross-decoder guard)",
     "dedup_minhash_recall_sample" -> "audit with corpus-adaptive probe rate: exact-side fan-out bounded at ~constant probe mass",
     "pipe_drop_reasons"    -> "output-bound: per-document drop attribution emits one row per corpus document, so full evaluation is corpus-proportional by contract (count-mode measures the plan shape)",
     "dedup_substr"         -> "compute-bound: full evaluation pays one linear map-side pass of positional-gram hashing over every document; count-mode prunes the per-gram expressions by design (same contract for the _stats/_strip twins)",

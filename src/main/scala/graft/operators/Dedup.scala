@@ -1360,9 +1360,6 @@ object Dedup {
     out.select(col("v").as("doc_id"), col("lab").as("component_id"))
   }
 
-  /** 2⁴² — the doc_id field width of the keep-best argmax encoding. */
-  private val KeepBestEncUnit = 1L << 42
-
   /** Quality-aware representative selection over the near-dup
     * components: per component keep the LONGEST member (n_chars —
     * "keep the most complete copy", the standard near-dup keep rule),
@@ -1370,13 +1367,9 @@ object Dedup {
     * each PAIR; this is the component-level policy a pipeline
     * actually applies after transitive closure.
     *
-    * The argmax resolves inside ONE aggregate via the packed integer
-    * encoding n_chars·2⁴² + (2⁴² − 1 − doc_id) — deterministic ties,
-    * no second max-join pass over the membership (the
-    * ann_cluster_purity precedent), with the same in-plan
-    * raise_error range guard: sound only for n_chars < 2²⁰ and
-    * doc_id < 2⁴², and it fails LOUDLY outside that envelope instead
-    * of silently corrupting the winner.
+    * The argmax is a packed [[Argmin]]: sound only for n_chars < 2²⁰
+    * and doc_id < 2⁴², and it fails LOUDLY outside that envelope
+    * instead of silently corrupting the winner.
     */
   def keepBest(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -1387,27 +1380,14 @@ object Dedup {
     * frames (spec entry — the argmax/tie/guard logic under planted
     * memberships; the component machinery itself is DedupSpec's).
     */
-  private[graft] def keepBestOf(comp: DataFrame, docs: DataFrame): DataFrame = {
-    val enc = col("n_chars") * lit(KeepBestEncUnit) +
-      (lit(KeepBestEncUnit - 1) - col("doc_id"))
-    val guard = when(col("n_chars").isNull,
-        raise_error(lit("keepBest: null n_chars for component member")))
-      .when(col("n_chars").between(0L, (1L << 20) - 1) &&
-              col("doc_id").between(0L, KeepBestEncUnit - 1), enc)
-      .otherwise(raise_error(concat(
-        lit("keepBest: doc outside packed range (n_chars < 2^20, " +
-          "doc_id < 2^42): "), col("doc_id").cast("string"))))
-    comp
-      .join(docs.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
-      .withColumn("enc", guard)
-      .groupBy(col("component_id"))
-      .agg(count(lit(1)).as("n_members"), max(col("enc")).as("sc"))
-      .select(col("component_id"), col("n_members"),
-        (lit(KeepBestEncUnit - 1) - col("sc") % lit(KeepBestEncUnit))
-          .as("kept_id"),
-        expr(s"sc div $KeepBestEncUnit").as("kept_chars"))
+  private[graft] def keepBestOf(comp: DataFrame, docs: DataFrame): DataFrame =
+    Argmin(comp.join(docs.select(col("doc_id"), col("n_chars")), Seq("doc_id")),
+        Seq("component_id"), "n_chars", "doc_id", "keepBest", desc = true,
+        bound = Some(Argmin.Bound(0L, (1L << 20) - 1, (1L << 42) - 1)),
+        carry = Seq("n_chars"), extra = Seq(count(lit(1)).as("n_members")))
+      .select(col("component_id"), col("n_members"), col("doc_id").as("kept_id"),
+        col("n_chars").cast("long").as("kept_chars"))
       .orderBy(col("component_id"))
-  }
 
   // --- persisted dedup-graph state + incremental components --------
 
@@ -2036,13 +2016,13 @@ object Dedup {
   private lazy val KeepBestOracleSql: String =
     s"""WITH comp AS ($ComponentsOracleSql),
        |m AS (SELECT c.component_id,
-       |        d.n_chars * ${KeepBestEncUnit} +
-       |          (${KeepBestEncUnit - 1} - d.doc_id) AS enc
+       |        d.n_chars * 4398046511104 +
+       |          (4398046511103 - d.doc_id) AS enc
        |      FROM comp c JOIN documents d ON d.doc_id = c.doc_id)
        |SELECT component_id, count(*) AS n_members,
-       |  CAST(${KeepBestEncUnit - 1} - max(enc) % $KeepBestEncUnit AS BIGINT)
+       |  CAST(4398046511103 - max(enc) % 4398046511104 AS BIGINT)
        |    AS kept_id,
-       |  CAST(max(enc) // $KeepBestEncUnit AS BIGINT) AS kept_chars
+       |  CAST(max(enc) // 4398046511104 AS BIGINT) AS kept_chars
        |FROM m GROUP BY 1
        |ORDER BY component_id""".stripMargin
 

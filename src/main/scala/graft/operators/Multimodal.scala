@@ -141,30 +141,14 @@ object Multimodal {
               length(col("frame")).as("frame_len"))
       .orderBy(col("media_id"), col("frame_idx"))
 
-  /** Cross-decoder guard sampling modulus: 1 (the default, and the
-    * gate-SF setting) verifies EVERY row in-plan; K > 1 verifies
-    * 1-in-K rows and skips the second, from-scratch decode entirely
-    * for the rest — the scale knob for the codec quartet, whose
-    * always-on guard is its dominant steady cost (the second decode
-    * roughly doubles per-row codec work; measured +30-50 % on the
-    * r11 bench). Unsampled rows pass the guard trivially (their
-    * independent features mirror the JDK ones), keeping the output
-    * schema and values identical at any modulus; the spec suite
-    * always runs at modulus 1, so every row is still checked at
-    * every gate.
-    */
-  private[graft] def guardMod: Long =
-    sys.env.getOrElse("SPARK_GRAFT_CODEC_GUARD_MOD", "1").toLong
-
   /** The in-plan cross-decoder equality guard — the `stats_hll_inc`
     * raise_error-guard precedent applied to the codec rows: the value
     * column passes through untouched when the JDK decode and the
     * from-scratch [[IndependentCodecs]] decode agree, and the QUERY
     * ITSELF fails loudly when they diverge — so the driver's
     * rows-only check on the `no_oracle` entries rides on a
-    * cross-implementation equality proof evaluated on every sampled
-    * row of every run ([[guardMod]]; every row at the default), not
-    * on a spec pin alone.
+    * cross-implementation equality proof evaluated on every row of
+    * every run, not on a spec pin alone.
     */
   private[graft] def crossGuard(out: Column, ok: Column, id: Column,
                                 what: String): Column =
@@ -182,7 +166,6 @@ object Multimodal {
   private[graft] def decodedBoth(media: DataFrame): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    val mod = guardMod
     media.select("media_id", "kind", "payload")
       .mapPartitions { rows: Iterator[Row] =>
         rows.map { r =>
@@ -190,18 +173,16 @@ object Multimodal {
           val kind = r.getString(1)
           val payload = r.getAs[Array[Byte]](2)
           val f = MediaDecoder.Real.decode(id, kind, payload)
-          val (iFrames, iW, iH, iDig) =
-            if (id % mod != 0L) (f.frames, f.width, f.height, f.digest)
-            else kind match {
-              case "image" =>
-                val (w, h, dig) = IndependentCodecs.pngFeatures(payload)
-                (1, w, h, dig)
-              case "audio" =>
-                val (n, rate, dig) = IndependentCodecs.decodeWav(payload)
-                (1, n, rate, dig)
-              case _ =>
-                IndependentCodecs.decodeVideo(payload)
-            }
+          val (iFrames, iW, iH, iDig) = kind match {
+            case "image" =>
+              val (w, h, dig) = IndependentCodecs.pngFeatures(payload)
+              (1, w, h, dig)
+            case "audio" =>
+              val (n, rate, dig) = IndependentCodecs.decodeWav(payload)
+              (1, n, rate, dig)
+            case _ =>
+              IndependentCodecs.decodeVideo(payload)
+          }
           (id, kind, f.nBytes, f.frames, f.width, f.height, f.digest,
             iFrames, iW, iH, iDig)
         }
@@ -404,7 +385,6 @@ object Multimodal {
     */
   def resizeThumbnails(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val mod = guardMod
     payloads(s, d, "resize", id => ("image", resizePayloadOf(id)))
       .select(col("media_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions { rows =>
@@ -414,10 +394,8 @@ object Multimodal {
           val (thumb, digest) = MediaCodecs.resizePng(png, ThumbW, ThumbH)
           // independent leg: the re-encoded thumbnail PNG decoded by
           // the from-scratch chunk walk must yield the same pixel
-          // digest the JDK resize path reported (sampled: guardMod)
-          val iDigest =
-            if (id % mod != 0L) digest
-            else IndependentCodecs.pngFeatures(thumb)._3
+          // digest the JDK resize path reported
+          val iDigest = IndependentCodecs.pngFeatures(thumb)._3
           (id, w, h, ThumbW, ThumbH, thumb.length, digest, iDigest)
         }
       }
@@ -453,13 +431,12 @@ object Multimodal {
     */
   def imageDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val mod = guardMod
     val hashes = payloads(s, d, "image", id => ("image", imagePayloadOf(id)))
       .select(col("media_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions { rows =>
         rows.map { case (id, png) =>
           val jh = MediaCodecs.dHashPng(png)
-          val ih = if (id % mod != 0L) jh else IndependentCodecs.pngDHash(png)
+          val ih = IndependentCodecs.pngDHash(png)
           (id, jh, ih)
         }
       }.toDF("doc_id", "simhash", "i_hash")
@@ -494,13 +471,12 @@ object Multimodal {
     */
   def audioDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val mod = guardMod
     val hashes = payloads(s, d, "audio", id => ("audio", audioPayloadOf(id)))
       .select(col("media_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions { rows =>
         rows.map { case (id, wav) =>
           val jh = MediaCodecs.fpWav(wav)
-          val ih = if (id % mod != 0L) jh else IndependentCodecs.wavFingerprint(wav)
+          val ih = IndependentCodecs.wavFingerprint(wav)
           (id, jh, ih)
         }
       }.toDF("doc_id", "simhash", "i_hash")

@@ -199,17 +199,31 @@ object Similarity {
     val q = e.filter(col("vec_id") % 20 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
     val c = e.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(pround(col("cos"), 6).desc, col("neighbor_id"))
-    broadcast(q).join(c, col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") === 1)
+    nearestMate(broadcast(q).join(c, col("neighbor_id") =!= col("query_id")),
+      "embedNearDup")
+  }
+
+  /** Each query's nearest candidate by (pround(cos, 6) desc,
+    * neighbor_id), flagged at the dup threshold — the shared tail of
+    * the near-dup scans. `cand` carries (query_id, qv, qnrm,
+    * neighbor_id, v, nrm).
+    */
+  private def nearestMate(cand: DataFrame, tag: String): DataFrame =
+    Argmin(cand.select(col("query_id"), col("neighbor_id"),
+        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos")),
+      Seq("query_id"), "cos", "neighbor_id", tag, desc = true,
+      bound = Some(cosBound(VecIdMax)), carry = Seq("cos"))
       .select(col("query_id"), col("neighbor_id"),
               pround(col("cos"), 4).as("cos_sim"),
               (pround(col("cos"), 4) >= 0.95).as("is_dup"))
       .orderBy(col("query_id"))
-  }
+
+  /** Packed envelope of a cosine argmax: |cos| ≤ 1 up to float error. */
+  private def cosBound(idHi: Long): Argmin.Bound =
+    Argmin.Bound(-1000001L, 1000001L, idHi)
+
+  /** Vector-id ceiling (2⁴² − 1) of the packed cosine argmaxes. */
+  private val VecIdMax = (1L << 42) - 1
 
   /** Near-dup scan over the FULL corpus via LSH buckets — the scale
     * path for embedding near-dup detection. [[embedNearDup]]'s probe
@@ -250,17 +264,8 @@ object Similarity {
                      col("nrm").as("qnrm"), col("bucket"))
     val c = b.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm"),
                      col("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(pround(col("cos"), 6).desc, col("neighbor_id"))
-    a.join(c, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") === 1)
-      .select(col("query_id"), col("neighbor_id"),
-              pround(col("cos"), 4).as("cos_sim"),
-              (pround(col("cos"), 4) >= 0.95).as("is_dup"))
-      .orderBy(col("query_id"))
+    nearestMate(a.join(c, Seq("bucket"))
+      .filter(col("neighbor_id") =!= col("query_id")), "embedNearDupLsh")
   }
 
   /** Symmetric int8 quantization + search — the embedding-compression
@@ -390,12 +395,10 @@ object Similarity {
   /** Clustering-quality audit: per-IVF-cluster label purity against
     * the embeddings table's ground-truth `label` — the standard
     * external evaluation a clustering step ships with (purity =
-    * majority-label fraction). The majority label resolves inside ONE
-    * aggregate via an integer encoding (n·10⁶ + (999999 − label), so
-    * max() picks highest count with smallest-label tiebreak — labels
-    * are bounded < 10⁶) — no second window pass, no branch
-    * divergence, deterministic ties in both engines. Cost on top of
-    * the shared assignment: one (cid,label) aggregate whose output is
+    * majority-label fraction). The majority label is a packed
+    * [[Argmin]] (highest count, smallest label; labels in [0, 999999],
+    * so a bad or null label fails the query). Cost on top of the
+    * shared assignment: one (cid,label) aggregate whose output is
     * clusters × labels.
     */
   def clusterPurity(s: SparkSession, d: String): DataFrame =
@@ -407,34 +410,19 @@ object Similarity {
     * NARROW assignment — they never ride the ranked stream.
     */
   private[graft] def clusterPurityOf(e: DataFrame, lbl: DataFrame): DataFrame = {
-    // The packed count*10^6 + (999999 - label) encoding below is only
-    // sound for labels in [0, 999999]; enforce it in-plan so a bad
-    // label fails LOUDLY (raise_error) instead of silently corrupting
-    // majority_label/purity. The check sits AFTER the vec_id join:
-    // only labels that actually enter the packing are policed —
-    // a stray row for a vector absent from the assignment is dropped
-    // by the join exactly as before the guard existed. Null labels
-    // (between() yields null → otherwise branch) get their own
-    // message rather than a null-concatenated one. Map-side,
-    // branch-free for in-range data, so it costs nothing hot.
-    val guard = when(col("label").isNull,
-        raise_error(lit("clusterPurity: null label for joined vec_id")))
-      .when(col("label").between(0L, 999999L), col("label"))
-      .otherwise(raise_error(concat(
-        lit("clusterPurity: label outside packed range [0, 999999]: "),
-        col("label").cast("string"))))
-    ivfAssignmentOf(e)
+    // labels join onto the assignment first, so only labels that enter
+    // the argmax are policed; a stray row for an absent vector drops
+    val counts = ivfAssignmentOf(e)
       .join(lbl, Seq("vec_id"))
-      .withColumn("label", guard)
       .groupBy(col("cid"), col("label"))
       .agg(count(lit(1)).as("n"))
-      .groupBy(col("cid"))
-      .agg(sum(col("n")).as("n_vecs"),
-           max(col("n") * lit(1000000L) + (lit(999999L) - col("label"))).as("sc"))
+    Argmin(counts, Seq("cid"), "n", "label", "clusterPurity", desc = true,
+        bound = Some(Argmin.Bound(0L, (1L << 43) - 1, 999999L)),
+        carry = Seq("n"), extra = Seq(sum(col("n")).as("n_vecs")))
       .select(col("cid"), col("n_vecs"),
-        (lit(999999L) - col("sc") % lit(1000000L)).cast("int").as("majority_label"),
-        expr("sc div 1000000").as("n_majority"),
-        floor(expr("sc div 1000000").cast("double")
+        col("label").cast("int").as("majority_label"),
+        col("n").as("n_majority"),
+        floor(col("n").cast("double")
           / col("n_vecs") * lit(1000d) + lit(0.5)).cast("long").as("purity_x1000"))
       .orderBy(col("cid"))
   }
@@ -478,49 +466,19 @@ object Similarity {
     * an EXPLICIT centroid table (cid, cv, cnrm) — narrow ranking,
     * like [[ivfAssignment]]; callers re-join vectors as needed.
     * Stateless per vector, so incremental batches compose exactly
-    * (IvfStateSpec pins slice == full-assignment restriction).
-    *
-    * r15: the rank=1 window became ONE codegen'd map-side-partial
-    * HashAggregate — min_by(cid, pack) + min_by(ccos, pack) over the
-    * packed-long ordering pack = (10⁶+1 − i6)·2³⁸ + cid with
-    * i6 = floor(ccos·10⁶ + 0.5). Minimizing pack maximizes i6 (the
-    * exact integer pround(ccos, 6) rides on) and breaks ties on the
-    * LOWEST cid — exactly row_number() over (pround(ccos, 6) desc,
-    * cid asc) = 1 — and the second min_by carries the winner's
-    * UNROUNDED ccos, so output is bit-identical. Both buffers are
-    * primitive (long/double + long), so this stays a HashAggregate
-    * (a struct-ordered min_by falls back to SortAggregate, which
-    * re-sorts the candidate stream — the thing being removed). The
-    * pack is PROVABLY in range: ccos is a cosine, |ccos| ≤ 1 up to
-    * float error, so (10⁶+1 − i6) < 2²¹ and the pack < 2⁵⁹; the
-    * in-plan raise_error guards the envelope loudly anyway (the
-    * keepBest discipline). Why it matters: the window's top-1
-    * rewrite LOCALLY SORTS every |corpus|×|cents| candidate row per
-    * pass — the registry's hottest stage at the 100× rung (the
-    * ann_ivf_pq_res coarse argmin, ~20 s); the aggregate sorts
-    * nothing and the exchange moves one row per vector.
+    * (IvfStateSpec pins slice == full-assignment restriction). A
+    * packed [[Argmin]] carrying the winner's unrounded ccos: it sorts
+    * none of the |corpus|×|cents| candidate rows and the exchange
+    * moves one row per vector. A zero-norm vector or centroid gives a
+    * NULL ccos (try_divide, so the guard names it instead of a bare
+    * DIVIDE_BY_ZERO).
     */
-  private def assignAgainst(e: DataFrame, cents: DataFrame): DataFrame = {
-    val i6 = floor(col("ccos") * lit(1000000d) + lit(0.5)).cast("long")
-    // a zero-norm vector or centroid gives a NULL ccos (try_divide, so
-    // the guard below reports it instead of a bare DIVIDE_BY_ZERO) and
-    // a NaN component a NaN one, which floor would turn into 0 and rank
-    // silently; both take the raise_error arm
-    val pack = when(col("cid").between(0L, AssignKidUnit - 1) &&
-          !isnan(col("ccos")) && i6.between(-1000001L, 1000001L),
-        (lit(1000001L) - i6) * lit(AssignKidUnit) + col("cid"))
-      .otherwise(raise_error(concat(
-        lit("assignAgainst: cid/ccos outside packed range " +
-          "(cid < 2^38, |ccos| <= 1, ccos not NULL or NaN): "),
-        col("cid").cast("string"))))
-    e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cid"),
-        try_divide(dot(col("v"), col("cv")), col("nrm") * col("cnrm")).as("ccos"))
-      .select(col("vec_id"), col("cid"), col("ccos"), pack.as("p"))
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("cid"), col("p")).as("cid"),
-           min_by(col("ccos"), col("p")).as("ccos"))
-  }
+  private def assignAgainst(e: DataFrame, cents: DataFrame): DataFrame =
+    Argmin(e.crossJoin(broadcast(cents))
+        .select(col("vec_id"), col("cid"),
+          try_divide(dot(col("v"), col("cv")), col("nrm") * col("cnrm")).as("ccos")),
+      Seq("vec_id"), "ccos", "cid", "assignAgainst", desc = true,
+      bound = Some(cosBound(KidMax)), carry = Seq("ccos"))
 
   // --- Persistent index state ---------------------------------------
   // The BloomDedup-state design applied to the ANN family: the INDEX
@@ -788,8 +746,8 @@ object Similarity {
         }: _*)).as("p"))
       .select(col("vec_id"), col("p.m").as("m"), col("p.sv").as("sv"))
 
-  /** 2³⁸ — kid/cid field width of the packed argmin encodings. */
-  private val AssignKidUnit = 1L << 38
+  /** Codeword/centroid id ceiling (2³⁸ − 1) of the packed argmins. */
+  private val KidMax = (1L << 38) - 1
 
   /** Squared Euclidean distance between the slice and the codeword. */
   private def sliceD2: Column =
@@ -798,71 +756,29 @@ object Similarity {
 
   /** Nearest codeword per (vector, subspace), NARROW: (vec_id, m,
     * kid) — the argmin of squared Euclidean distance with kid
-    * tiebreak, for ARBITRARY input vectors (no bound on d2): two
-    * codegen'd map-side-partial HashAggregates over the exact
-    * micro-rounding integer d2i = floor(d2·10⁶ + 0.5) (the integer
-    * pround(d2, 6) rides on — order-isomorphic to it and exact in a
-    * long for any d2 below ~9·10⁹, i.e. effectively unbounded):
-    * min(d2i) per (vector, subspace), join the candidates back on
-    * the winning d2i, min(kid) among the tied rows — exactly
-    * row_number() over (pround(d2, 6) asc, kid asc) = 1. The
-    * candidate derivation is evaluated twice (both sides of the
-    * join-back), which is acceptable here and only here because the
-    * sole caller is TRAINING ([[assignCodes]]), whose input is the
-    * [[pqTrainStride]]-bounded sample (≤ ~2·target vectors × PqM
-    * slices at ANY corpus size) and whose vectors are whatever the
-    * caller supplies (PqTrainSampleSpec trains on an unnormalized
-    * corpus with per-slice d2 in the thousands — the r14 packed form
-    * raise_error'd exactly there; an r15 first cut used
-    * min_by(kid, struct(d2r, kid)), whose struct-typed buffer is not
-    * UnsafeRow-mutable and planned as a per-row-allocating
-    * SortAggregate — measured ~10× the stage cost at the 100× rung).
+    * tiebreak, for ARBITRARY input vectors: the unbounded [[Argmin]].
+    * Its sole caller is TRAINING ([[assignCodes]]), whose input is
+    * the [[pqTrainStride]]-bounded sample and whose vectors are
+    * whatever the caller supplies (PqTrainSampleSpec trains on an
+    * unnormalized corpus with per-slice d2 in the thousands).
     * Corpus-scale encodes go through [[assignCodesBounded]].
     */
-  private[graft] def assignCodesNarrow(sub: DataFrame, cb: DataFrame): DataFrame = {
-    val cand = sub.join(broadcast(cb), Seq("m"))
-      .select(col("vec_id"), col("m"), col("kid"),
-        floor(sliceD2 * lit(1000000d) + lit(0.5)).cast("long").as("d2i"))
-    // best is one row per (vector, subspace) — sample-sized, so the
-    // join-back broadcasts and the candidate stream never shuffles
-    val best = cand.groupBy(col("vec_id"), col("m")).agg(min(col("d2i")).as("d2i"))
-    cand.join(broadcast(best), Seq("vec_id", "m", "d2i"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(col("kid")).as("kid"))
-  }
+  private[graft] def assignCodesNarrow(sub: DataFrame, cb: DataFrame): DataFrame =
+    Argmin(codeD2(sub, cb), Seq("vec_id", "m"), "d2", "kid", "assignCodesNarrow")
 
-  /** [[assignCodesNarrow]] for the CORPUS-SCALE encode: same argmin,
-    * resolved inside ONE codegen'd map-side-partial HashAggregate via
-    * the packed-integer ordering d2i·2³⁸ + kid, where
-    * d2i = floor(pround(d2, 6)·2²⁰ + 0.5) is the SAME integerization
-    * the ADC distance table ships as `pd2i`. Equivalence: d2i is
-    * order-isomorphic to pround(d2, 6) (distinct micro-rounded values
-    * are ≥ 1e-6 apart; ×2²⁰ spaces them ≥ 1.048, so floor(·+0.5)
-    * preserves strict order), equal keys collide and +kid breaks the
-    * tie low — exactly the window/min_by ordering, spec-pinned
-    * against [[assignCodesNarrow]] on normalized input
-    * (PqTrainSampleSpec).
-    *
-    * Range contract (in-plan raise_error, the keepBest discipline):
-    * kid < 2³⁸ and d2 ≤ 16. Every encode caller satisfies it BY
-    * CONSTRUCTION — unit-normalized slices give ‖sv−kv‖² ≤ 4,
-    * residual slices ≤ 16 — which is why this form is reserved for
-    * the encode and training takes the unbounded one.
+  /** [[assignCodesNarrow]] for the CORPUS-SCALE encode: the packed
+    * [[Argmin]], whose range contract kid < 2³⁸ and d2 ≤ 16 every
+    * encode caller satisfies BY CONSTRUCTION — unit-normalized slices
+    * give ‖sv−kv‖² ≤ 4, residual slices ≤ 16.
     */
-  private[graft] def assignCodesBounded(sub: DataFrame, cb: DataFrame): DataFrame = {
-    val enc = when(col("kid").between(0L, AssignKidUnit - 1) &&
-          col("d2i").between(0L, 1L << 24),
-        col("d2i") * lit(AssignKidUnit) + col("kid"))
-      .otherwise(raise_error(concat(
-        lit("assignCodesBounded: kid/d2 outside packed range (kid < 2^38, " +
-          "d2 <= 16): "), col("kid").cast("string"))))
+  private[graft] def assignCodesBounded(sub: DataFrame, cb: DataFrame): DataFrame =
+    Argmin(codeD2(sub, cb), Seq("vec_id", "m"), "d2", "kid", "assignCodesBounded",
+      bound = Some(Argmin.Bound(0L, 16000000L, KidMax)))
+
+  /** (vec_id, m, kid, d2): every slice against its subspace's codewords. */
+  private def codeD2(sub: DataFrame, cb: DataFrame): DataFrame =
     sub.join(broadcast(cb), Seq("m"))
-      .withColumn("d2i",
-        floor(pround(sliceD2, 6) * lit(MeanScale) + lit(0.5)).cast("long"))
-      .select(col("vec_id"), col("m"), col("kid"), enc.as("p"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min_by(col("kid"), col("p")).as("kid"))
-  }
+      .select(col("vec_id"), col("m"), col("kid"), sliceD2.as("d2"))
 
   /** [[assignCodesNarrow]] with the slice payload re-attached — the
     * TRAINING form (the Lloyd round's mean needs sv back). The
@@ -1204,9 +1120,9 @@ object Similarity {
   private val MeanScale = 1048576.0
 
   /** Lloyd's k-means for IVF centroids, DataFrame-native: assignment
-    * is a broadcast argmin pass (ranked on pround(d2, 6) with cid
-    * tiebreak — engine-stable), the update step recomputes element-
-    * wise means via posexplode → (cid, dim) exact integerized mean →
+    * is the unbounded [[Argmin]] over broadcast centroids (ranked on
+    * pround(d2, 6) with cid tiebreak — engine-stable), the update
+    * step recomputes element-wise means via posexplode → (cid, dim) exact integerized mean →
     * array rebuild. Deterministic: init = the sampled centroids,
     * fixed iteration count, squared-Euclidean objective (monotone
     * under Lloyd — asserted in AnnRecallSpec).
@@ -1221,11 +1137,17 @@ object Similarity {
     */
   def trainIvfCentroids(s: SparkSession, d: String, iters: Int = TrainIters,
                         checkpoint: Boolean = true): DataFrame = {
-    val e = vectors(s, d).select(col("vec_id"), col("v"))
+    // clustered on vec_id once (one exchange, reused by every round),
+    // so each round's argmin aggregates and joins back shuffle-free
+    val e = vectors(s, d).select(col("vec_id"), col("v")).repartition(col("vec_id"))
     var cents = sampledVecs(e)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
-    for (_ <- 0 until iters) {
-      val assigned = assignToCentroids(e, cents)
+    for (i <- 0 until iters) {
+      // the two-pass argmin reads the centroids twice, so unrolled
+      // rounds would double the static tree per round; sealed (a few
+      // KB), every trained round plans and runs once
+      val assigned = assignToCentroids(e,
+        if (checkpoint || i == 0) cents else graft.plans.LazySeal.seal(cents))
       // one groupBy(cid) with the integerized vector-mean aggregate —
       // the posexplode + (cid, dim) agg + collect_list/sort/transform
       // re-assembly this replaces multiplied the aggregation input by
@@ -1248,21 +1170,18 @@ object Similarity {
     * interpreted — boxing per element — and measured ~6x slower on
     * the training crossJoin). The norms are computed once per row
     * per side, not per pair. Ranking on pround(d2, 6) + cid absorbs
-    * the ≤1-ulp difference vs the fold form.
+    * the ≤1-ulp difference vs the fold form. Unbounded: raw vectors
+    * carry no d2 ceiling.
     */
   private def assignToCentroids(e: DataFrame, cents: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(pround(col("d2"), 6), col("cid"))
     val ev = e.withColumn("vv", dot(col("v"), col("v")))
     val cc = cents.withColumn("cc", dot(col("cv"), col("cv")))
-    // rank narrow (no v in the sorted stream — see [[ivfAssignment]]),
+    // rank narrow (no v in the candidate stream — see [[ivfAssignment]]),
     // then re-join the vectors the mean update needs
-    val top = ev.crossJoin(broadcast(cc))
-      .select(col("vec_id"), col("cid"),
-        (col("vv") - lit(2.0) * dot(col("v"), col("cv")) + col("cc")).as("d2"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") === 1)
-      .select(col("vec_id"), col("cid"), col("d2"))
+    val top = Argmin(ev.crossJoin(broadcast(cc))
+        .select(col("vec_id"), col("cid"),
+          (col("vv") - lit(2.0) * dot(col("v"), col("cv")) + col("cc")).as("d2")),
+      Seq("vec_id"), "d2", "cid", "assignToCentroids", carry = Seq("d2"))
     top.join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
       .select(col("vec_id"), col("v"), col("cid"), col("d2"))
   }
@@ -1375,14 +1294,6 @@ object Similarity {
     */
   private val SemEvalMod = 50
 
-  /** Field width of the nearest-eval argmax encoding (2⁴²) — the
-    * [[graft.operators.Dedup]] keep-best packing: micro-cosine
-    * (shifted non-negative, ≤ 2·10⁶ so the product stays < 2⁶³) in
-    * the high bits, complemented eval id in the low bits for
-    * deterministic smallest-id ties.
-    */
-  private val SemEncUnit = 1L << 42
-
   /** SEMANTIC eval-set decontamination report — the embedding-level
     * complement of the 13-gram `txt_decontam`: n-gram overlap misses
     * paraphrased benchmark leakage, so pipelines ALSO screen by
@@ -1396,60 +1307,38 @@ object Similarity {
     *
     * 100 TB shape: eval sets are SMALL and FIXED (thousands of
     * vectors) — they broadcast, the corpus never shuffles, and the
-    * per-doc argmax resolves map-side inside one packed-integer
-    * aggregate (partial = one row per doc per partition). Linear in
-    * the corpus at fixed eval size; an eval set too large to
-    * broadcast would go through the LSH bucket join
+    * per-doc argmax is a packed [[Argmin]] (partial = one row per doc
+    * per partition). Linear in the corpus at fixed eval size; an eval
+    * set too large to broadcast would go through the LSH bucket join
     * ([[embedNearDupLsh]]'s path) instead. Ties (equal micro-cosine
-    * to two eval vectors) resolve to the LOWEST eval id in both
-    * engines via the packed encoding; the id range is guarded
-    * in-plan (the clusterPurity raise_error discipline).
+    * to two eval vectors) resolve to the LOWEST eval id.
     */
   def semanticDecontam(s: SparkSession, d: String): DataFrame = {
     val e = vectors(s, d)
-    e.filter(col("vec_id") % SemEvalMod =!= 0)
-      .crossJoin(broadcast(semEvalSide(e, "semanticDecontam")))
-      .transform(evalCosRows)
-      .transform(nearestEvalReport)
+    nearestEvalReport(evalCos(e.filter(col("vec_id") % SemEvalMod =!= 0)
+      .crossJoin(broadcast(semEvalSide(e)))), "semanticDecontam")
   }
 
-  /** The eval side of the decontam screen: (eval_id, evv, evnrm) with
-    * the packed-range raise_error guard applied (the clusterPurity
-    * discipline — an id outside 2⁴² would corrupt the argmax packing
-    * silently).
-    */
-  private def semEvalSide(e: DataFrame, tag: String): DataFrame =
+  /** The eval side of the decontam screen: (eval_id, evv, evnrm). */
+  private def semEvalSide(e: DataFrame): DataFrame =
     e.filter(col("vec_id") % SemEvalMod === 0)
       .select(col("vec_id").as("eval_id"), col("v").as("evv"),
         col("nrm").as("evnrm"))
-      .withColumn("eval_id",
-        when(col("eval_id").between(0L, SemEncUnit - 1), col("eval_id"))
-          .otherwise(raise_error(concat(
-            lit(s"$tag: eval_id outside packed range: "),
-            col("eval_id").cast("string")))))
 
-  /** Micro-integerized cosine per (doc, eval) candidate row — shared
-    * verbatim by every branch of the decontam family so brute, IVF
-    * and the adaptive union are bit-compatible on rounding.
-    */
-  private def evalCosRows(cand: DataFrame): DataFrame =
-    cand.select(col("vec_id").as("doc_id"),
-      (floor(pround(dot(col("v"), col("evv")) / (col("nrm") * col("evnrm")),
-          6) * lit(1000000d) + lit(0.5)).cast("long")
-        + lit(1000000L)).as("cosm"),
-      col("eval_id"))
+  /** (doc_id, eval_id, cos) per (doc, eval) candidate row. */
+  private def evalCos(cand: DataFrame): DataFrame =
+    cand.select(col("vec_id").as("doc_id"), col("eval_id"),
+      (dot(col("v"), col("evv")) / (col("nrm") * col("evnrm"))).as("cos"))
 
-  /** Packed-integer argmax over (doc_id, cosm, eval_id) rows — one
-    * order-free max per doc, ties to the LOWEST eval id in both
-    * engines via the complemented low bits.
+  /** Nearest eval vector per doc: (doc_id, eval_id, max_cos_x1e6) —
+    * shared verbatim by every branch of the decontam family so brute,
+    * IVF and the adaptive union are bit-compatible on rounding.
     */
-  private def nearestEvalReport(rows: DataFrame): DataFrame =
-    rows.groupBy(col("doc_id"))
-      .agg(max(col("cosm") * lit(SemEncUnit)
-        + (lit(SemEncUnit - 1) - col("eval_id"))).as("enc"))
-      .select(col("doc_id"),
-        (lit(SemEncUnit - 1) - col("enc") % lit(SemEncUnit)).as("eval_id"),
-        (expr(s"enc div $SemEncUnit") - lit(1000000L)).as("max_cos_x1e6"))
+  private def nearestEvalReport(rows: DataFrame, tag: String): DataFrame =
+    Argmin(rows, Seq("doc_id"), "cos", "eval_id", tag, desc = true,
+      bound = Some(cosBound(VecIdMax)), carry = Seq("cos"))
+      .select(col("doc_id"), col("eval_id"),
+        floor(col("cos") * lit(1000000d) + lit(0.5)).cast("long").as("max_cos_x1e6"))
       .orderBy(col("doc_id"))
 
   /** Per-DIMENSION embedding statistics — the health/whitening audit
@@ -1513,8 +1402,8 @@ object Similarity {
     * list (top-1, [[assignAgainst]]), every document probes its
     * [[NProbe]] nearest lists, and the nearest-eval argmax runs only
     * over (doc, eval) pairs that share a probed list — the same
-    * packed-integer encoding and id guard as the brute form, so ties
-    * and rounding are bit-compatible.
+    * [[nearestEvalReport]] as the brute form, so ties and rounding
+    * are bit-compatible.
     *
     * Differences from the brute report, by construction: a document
     * whose probed lists contain no eval vector has no candidates and
@@ -1548,10 +1437,9 @@ object Similarity {
     */
   def semanticDecontamIvf(s: SparkSession, d: String): DataFrame = {
     val e = vectors(s, d)
-    semIvfCandidates(e, e.filter(col("vec_id") % SemEvalMod =!= 0),
-        e.filter(col("vec_id") % SemEvalMod === 0), "semanticDecontamIvf")
-      .transform(evalCosRows)
-      .transform(nearestEvalReport)
+    nearestEvalReport(evalCos(semIvfCandidates(e,
+        e.filter(col("vec_id") % SemEvalMod =!= 0),
+        e.filter(col("vec_id") % SemEvalMod === 0))), "semanticDecontamIvf")
   }
 
   /** IVF candidate machinery shared by [[semanticDecontamIvf]] and
@@ -1563,22 +1451,17 @@ object Similarity {
     * live (the `bandGeometryOf` discipline — no driver job).
     */
   private def semIvfCandidates(e: DataFrame, docsE: DataFrame,
-                               evalsE: DataFrame, tag: String): DataFrame = {
+                               evalsE: DataFrame): DataFrame = {
     val dstride = e.agg(count(lit(1)).as("nvecs"))
       .select(expr(s"greatest(${CentroidEvery}L, " +
         "shiftleft(1L, cast(2 + length(bin(nvecs)) / 2 as int)))").as("stride"))
     val cents = e.crossJoin(broadcast(dstride))
       .filter(col("vec_id") % col("stride") === 0)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
-    val guard = when(col("eval_id").between(0L, SemEncUnit - 1), col("eval_id"))
-      .otherwise(raise_error(concat(
-        lit(s"$tag: eval_id outside packed range: "),
-        col("eval_id").cast("string"))))
     val ev = assignAgainst(evalsE, cents)
       .select(col("vec_id").as("eval_id"), col("cid"))
       .join(e.select(col("vec_id").as("eval_id"), col("v").as("evv"),
         col("nrm").as("evnrm")), Seq("eval_id"))
-      .withColumn("eval_id", guard)
     val wp = Window.partitionBy(col("vec_id"))
       .orderBy(pround(col("pcos"), 6).desc, col("cid"))
     val probed = docsE
@@ -1609,7 +1492,7 @@ object Similarity {
     * BEFORE their joins, so the dead branch degenerates to empty
     * linear scans — the quadratic cross join streams zero rows and
     * the unused broadcast builds empty — and the live branch's rows
-    * flow through the SHARED [[evalCosRows]]/[[nearestEvalReport]]
+    * flow through the SHARED [[nearestEvalReport]]
     * tail, bit-compatible with both standalone forms.
     *
     * At every gate SF the eval slice (N/[[SemEvalMod]]) sits under
@@ -1641,13 +1524,11 @@ object Similarity {
     val docs = e.filter(col("vec_id") % SemEvalMod =!= 0)
     val evals = e.filter(col("vec_id") % SemEvalMod === 0)
     val bruteRows = gated(docs, brute = true)
-      .crossJoin(broadcast(gated(
-        semEvalSide(e, "semanticDecontamAdaptive"), brute = true)))
-      .transform(evalCosRows)
+      .crossJoin(broadcast(gated(semEvalSide(e), brute = true)))
     val ivfRows = semIvfCandidates(e, gated(docs, brute = false),
-        gated(evals, brute = false), "semanticDecontamAdaptive")
-      .transform(evalCosRows)
-    nearestEvalReport(bruteRows.unionByName(ivfRows))
+        gated(evals, brute = false))
+    nearestEvalReport(evalCos(bruteRows).unionByName(evalCos(ivfRows)),
+      "semanticDecontamAdaptive")
   }
 
   /** Cluster-balanced temperature selection — the temperature-scaled
@@ -1887,11 +1768,11 @@ object Similarity {
          |         ev.eval_id
          |       FROM e, ev WHERE e.vec_id % $SemEvalMod <> 0),
          |mx AS (SELECT doc_id,
-         |         max(cosm * $SemEncUnit + ($SemEncUnit - 1 - eval_id)) AS enc
+         |         max(cosm * 4398046511104 + (4398046511104 - 1 - eval_id)) AS enc
          |       FROM sc GROUP BY doc_id)
          |SELECT doc_id,
-         |  CAST($SemEncUnit - 1 - enc % $SemEncUnit AS BIGINT) AS eval_id,
-         |  CAST(enc // $SemEncUnit - 1000000 AS BIGINT) AS max_cos_x1e6
+         |  CAST(4398046511104 - 1 - enc % 4398046511104 AS BIGINT) AS eval_id,
+         |  CAST(enc // 4398046511104 - 1000000 AS BIGINT) AS max_cos_x1e6
          |FROM mx ORDER BY doc_id""".stripMargin,
     "smp_decontam_sem_ivf" ->
       s"""WITH $vecCte,
@@ -1913,11 +1794,11 @@ object Similarity {
          |         ev.eval_id
          |       FROM pl p JOIN ev ON ev.cid = p.cid),
          |mx AS (SELECT doc_id,
-         |         max(cosm * $SemEncUnit + ($SemEncUnit - 1 - eval_id)) AS enc
+         |         max(cosm * 4398046511104 + (4398046511104 - 1 - eval_id)) AS enc
          |       FROM sc GROUP BY doc_id)
          |SELECT doc_id,
-         |  CAST($SemEncUnit - 1 - enc % $SemEncUnit AS BIGINT) AS eval_id,
-         |  CAST(enc // $SemEncUnit - 1000000 AS BIGINT) AS max_cos_x1e6
+         |  CAST(4398046511104 - 1 - enc % 4398046511104 AS BIGINT) AS eval_id,
+         |  CAST(enc // 4398046511104 - 1000000 AS BIGINT) AS max_cos_x1e6
          |FROM mx ORDER BY doc_id""".stripMargin,
     "smp_cluster_temp" ->
       s"""WITH $ivfCte,

@@ -8,7 +8,8 @@ import graft.functions.NormalizeText.normalize_text
 /** Differential spec: the codegen'd normalizer must agree with the
   * regex form it replaces —
   * trim(regexp_replace(lower(text), "[^\p{L}\p{N}]+", " ")) —
-  * on edge cases, generated Unicode, and the reference corpus.
+  * on edge cases, generated Unicode, and the fixture and reference
+  * corpora.
   */
 class NormalizeTextSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -45,6 +46,16 @@ class NormalizeTextSpec extends AnyFunSuite {
         regexNorm(col("text")).as("slow"))
       .filter(not(col("fast") === col("slow")))
     assert(diff.isEmpty)
+  }
+
+  test("agrees with the regex path on the fixture corpus") {
+    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+      .select(col("text"))
+    val diff = docs.select(col("text"),
+        normalize_text(col("text")).as("fast"),
+        regexNorm(col("text")).as("slow"))
+      .filter(not(col("fast") === col("slow")))
+    assert(docs.count() > 0 && diff.isEmpty, diff.take(3).mkString("\n"))
   }
 
   test("stays inside whole-stage codegen and is SQL-registered") {

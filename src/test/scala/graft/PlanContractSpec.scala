@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan contracts enforced across the WHOLE query surface — the
@@ -183,6 +184,41 @@ class PlanContractSpec extends AnyFunSuite {
     }
     assert(hashExchanges.isEmpty,
       s"per-doc metric must not hash-shuffle: $hashExchanges")
+  }
+
+  test("argmins plan no window and no top-k: Lloyd training and the near-dup scans") {
+    val plans = Seq(
+      "trainIvfCentroids" -> graft.operators.Similarity
+        .trainIvfCentroids(spark, sf, checkpoint = false),
+      "sim_near_dup" -> SparkEntry.queries("sim_near_dup")(spark, sf),
+      "sim_near_dup_lsh" -> SparkEntry.queries("sim_near_dup_lsh")(spark, sf))
+    for ((name, df) <- plans) {
+      val plan = unwrap(df.queryExecution.executedPlan)
+      val sorted = plan.collect {
+        case w: WindowExec => w
+        case t: graft.plans.TopKPerGroupExec => t
+      }
+      assert(sorted.isEmpty, s"$name still ranks with a sort: $sorted")
+    }
+  }
+
+  test("queries built on the argmin helper plan no SortAggregate") {
+    val converted = Seq("ann_ivf", "ann_ivf_lists", "ann_ivf_recall",
+      "ann_ivf_trained", "ann_ivf_pq", "ann_ivf_pq_idx", "ann_ivf_pq_res",
+      "ann_ivf_pq_res_idx", "ann_cluster_purity", "smp_decontam_sem",
+      "smp_decontam_sem_ivf", "smp_cluster_temp", "dedup_semantic",
+      "dedup_semantic_capped", "sim_near_dup", "sim_near_dup_lsh",
+      "dedup_keep_best", "dedup_keep_best_idx", "pipe_drift")
+    val sortAggs = converted.map { q =>
+      val plan = unwrap(SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan)
+      // a string buffer (the near-dup collapse prepass's max(text)
+      // exemplar) is the one SortAggregate source that is not an argmin
+      q -> plan.collect {
+        case a: SortAggregateExec if !a.output.exists(_.dataType == StringType) =>
+          a.output.map(_.name)
+      }
+    }.filter(_._2.nonEmpty)
+    assert(sortAggs.isEmpty, sortAggs.mkString("\n"))
   }
 
   test("rank-filter queries plan through TopKPerGroup") {

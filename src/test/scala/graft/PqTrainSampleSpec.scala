@@ -43,8 +43,8 @@ class PqTrainSampleSpec extends AnyFunSuite {
       cbRows(Similarity.trainPqCodebooks(perturbed)))
   }
 
-  // the encode path's hash-aggregable packed argmin must agree with
-  // training's unbounded min_by argmin wherever the encode's range
+  // the encode runs Argmin's packed form and training its unbounded
+  // two-pass form: they must agree wherever the encode's range
   // contract (unit-normalized input, d2 <= 16) holds — including the
   // micro-rounded-tie / lowest-kid tiebreak behavior
   test("bounded encode argmin equals the unbounded training argmin on normalized vectors") {

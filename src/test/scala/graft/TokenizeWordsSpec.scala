@@ -7,7 +7,7 @@ import graft.functions.TokenizeWords.tokenize_words
 
 /** Differential spec: the codegen'd tokenizer must agree with the
   * regex path (`split` on `[^\p{L}]+` + empties filter) on everything
-  * — edge cases, the full reference corpus, and generated Unicode
+  * — edge cases, the fixture and reference corpora, and generated Unicode
   * incl. supplementary-plane code points.
   */
 class TokenizeWordsSpec extends AnyFunSuite {
@@ -45,6 +45,16 @@ class TokenizeWordsSpec extends AnyFunSuite {
         regexTokens(col("text")).as("slow"))
       .filter(not(col("fast") === col("slow")))
     assert(diff.isEmpty)
+  }
+
+  test("agrees with the regex path on the fixture corpus") {
+    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+      .select(col("text"))
+    val diff = docs.select(col("text"),
+        tokenize_words(col("text")).as("fast"),
+        regexTokens(col("text")).as("slow"))
+      .filter(not(col("fast") === col("slow")))
+    assert(docs.count() > 0 && diff.isEmpty, diff.take(3).mkString("\n"))
   }
 
   test("stays inside whole-stage codegen") {
