@@ -79,26 +79,84 @@ object Dedup {
     // hashed gram rows like [[ngramJaccard]]; the per-doc size window
     // stays because Jaccard here is over the CAPPED shingle sets, so
     // sizes can only be counted after the df filter
-    val sh = gramHashRows(s, d).select(col("doc_id"), col("gh"))
-    val keep = sh.groupBy(col("gh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= DfCap).select(col("gh"))
-    val capped = sh.join(keep, "gh")
+    val capped = underCap(gramHashRows(s, d).select(col("doc_id"), col("gh")),
+      Seq("gh"), DfCap)
     val wn = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
     // one explicit shuffle by gh shared by both join sides (identical
     // subtree → the second side reuses the first's exchange instead of
     // recomputing the whole gram chain; measured 2x at sf0.1)
-    val ngn = capped.withColumn("n", count(lit(1)).over(wn))
-      .repartition(col("gh"))
-    val a = ngn.select(col("doc_id").as("doc_a"), col("gh"), col("n").as("na"))
-    val b = ngn.select(col("doc_id").as("doc_b"), col("gh"), col("n").as("nb"))
-    a.join(b, Seq("gh")).filter(col("doc_a") < col("doc_b"))
+    jaccardPairs(capped.withColumn("n", count(lit(1)).over(wn))
+      .repartition(col("gh")))
+  }
+
+  // --- shared near-dup stages: candidates → exact overlap → accept ---
+
+  /** Every pair sharing a posting of `ngn` (doc_id, gh, n), scored by
+    * rounded Jaccard and kept at ≥ [[JaccardThreshold]] — the tail of
+    * both n-gram Jaccard queries. `ngn` arrives gh-partitioned, so the
+    * two join sides reuse one exchange.
+    */
+  private def jaccardPairs(ngn: DataFrame): DataFrame =
+    postings(ngn, "doc_a", "na").join(postings(ngn, "doc_b", "nb"), Seq("gh"))
+      .filter(col("doc_a") < col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
       .agg(count(lit(1)).as("c"))
-      .withColumn("jaccard", pround(col("c") / (col("na") + col("nb") - col("c")), 4))
+      .withColumn("jaccard", jaccard4)
       .filter(col("jaccard") >= JaccardThreshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
+
+  /** One side of a gram-posting self-join: (id, gh, n AS size). */
+  private def postings(grams: DataFrame, id: String, size: String): DataFrame =
+    grams.select(col("doc_id").as(id), col("gh"), col("n").as(size))
+
+  /** `rows` restricted to key values held by at most `cap` rows — the
+    * occupancy / document-frequency cap that bounds one bucket's pair
+    * fan-out at C(cap, 2) however template-correlated the corpus is.
+    */
+  private def underCap(rows: DataFrame, keys: Seq[String], cap: Long): DataFrame =
+    rows.join(rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("occ"))
+      .filter(col("occ") <= cap).select(keys.map(col): _*), keys)
+
+  /** Candidate pairs (doc_a < doc_b) of `rows` (doc_id + `keys`) that
+    * share a key value — the bucket self-join every near-dup family
+    * runs (LSH band signature, gram posting). Callers repartition
+    * `rows` on the keys where both sides should reuse one exchange.
+    */
+  private def pairsSharing(rows: DataFrame, keys: String*): DataFrame = {
+    def side(id: String) = rows.select(col("doc_id").as(id) +: keys.map(col): _*)
+    side("doc_a").join(side("doc_b"), keys)
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b")).distinct()
   }
+
+  /** Exact overlap of each candidate pair against FULL gram rows:
+    * (doc_a, doc_b, na, nb, c) with na, nb the docs' distinct-gram
+    * counts and c the shared ones. The inner joins restrict gram
+    * movement to candidate endpoints by themselves.
+    */
+  private def overlapCounts(cand: DataFrame, grams: DataFrame): DataFrame =
+    cand.join(postings(grams, "doc_a", "na"), "doc_a")
+      .join(postings(grams, "doc_b", "nb"), Seq("doc_b", "gh"))
+      .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
+      .agg(count(lit(1)).as("c"))
+
+  /** pround(J, 4) over [[overlapCounts]] columns. */
+  private val jaccard4 = pround(col("c") / (col("na") + col("nb") - col("c")), 4)
+
+  /** Candidates verified on the EXACT rational predicate
+    * 5c ≥ 4(na+nb−c), not on pround(J,4) ≥ 0.8: the rounded form
+    * accepts true J ≥ 0.79995, but prefix-candidate completeness is
+    * proven only for J ≥ 0.8 — a pair in [0.79995, 0.8) could pass a
+    * rounded brute filter while missing from the prefix candidate set,
+    * breaking the exactness claim. Integer arithmetic keeps both
+    * engines boundary-identical. (doc_a, doc_b, jaccard).
+    */
+  private def exactVerified(cand: DataFrame, grams: DataFrame): DataFrame =
+    overlapCounts(cand, grams)
+      .filter(col("c") * 5 >= (col("na") + col("nb") - col("c")) * 4)
+      .withColumn("jaccard", jaccard4)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
 
   /** Distinct word-3-gram shingles per document: (doc_id, g).
     *
@@ -224,12 +282,17 @@ object Dedup {
     * beyond it, recall is bought with more slots, not looser bands.
     */
   private[graft] def bandGeometryOf(docs: DataFrame): DataFrame =
-    docs.agg(count(lit(1)).as("n"))
-      .select(
-        when(col("n") <= AdaptSmallMax, lit(2L))
-          .otherwise(lit(BandRows.toLong)).as("r"),
-        when(col("n") <= AdaptSmallMax, lit(MinhashK.toLong / 2))
-          .otherwise(lit(MinhashK.toLong / BandRows)).as("nb"))
+    geomOfStats(docs.agg(count(lit(1)).as("n")))
+
+  /** [[bandGeometryOf]]'s formula over any row carrying the corpus
+    * count `n`.
+    */
+  private def geomOfStats(stats: DataFrame): DataFrame =
+    stats.select(
+      when(col("n") <= AdaptSmallMax, lit(2L))
+        .otherwise(lit(BandRows.toLong)).as("r"),
+      when(col("n") <= AdaptSmallMax, lit(MinhashK.toLong / 2))
+        .otherwise(lit(MinhashK.toLong / BandRows)).as("nb"))
 
   /** Slot-array form of [[minhashCols]] (the dynamic-geometry band
     * builder consumes the array, not the 16 pivoted columns).
@@ -267,17 +330,12 @@ object Dedup {
   /** Candidate near-dup pairs: same signature in any band — the join
     * key is (band, sig), so only colliding buckets ever meet.
     */
-  def minhashPairs(s: SparkSession, d: String): DataFrame = {
+  def minhashPairs(s: SparkSession, d: String): DataFrame =
     // shared explicit exchange on the join key for both aliases (see
     // ngramJaccard — avoids recomputing the minhash chain per side)
-    val b = minhashBands(s, d).repartition(col("band"), col("sig"))
-    val a = b.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
-    val c = b.select(col("doc_id").as("doc_b"), col("band"), col("sig"))
-    a.join(c, Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    pairsSharing(minhashBands(s, d).repartition(col("band"), col("sig")),
+      "band", "sig")
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** LSH quality audit: recall and precision of the banded MinHash
     * candidate generator against the EXACT Jaccard pair set at the
@@ -360,14 +418,13 @@ object Dedup {
     def probe(c: org.apache.spark.sql.Column) =
       portableHash(concat(lit("recall:"), c.cast("string"))) % col("pmod") === 0
     val ngn = gramHashRows(s, d).repartition(col("gh"))
-    val a = ngn.crossJoin(broadcast(pm)).filter(probe(col("doc_id")))
-      .select(col("doc_id").as("doc_a"), col("gh"), col("n").as("na"))
-    val b = ngn.select(col("doc_id").as("doc_b"), col("gh"), col("n").as("nb"))
-    val exact = a.join(b, Seq("gh")).filter(col("doc_a") =!= col("doc_b"))
+    val a = postings(ngn.crossJoin(broadcast(pm)).filter(probe(col("doc_id"))),
+      "doc_a", "na")
+    val exact = a.join(postings(ngn, "doc_b", "nb"), Seq("gh"))
+      .filter(col("doc_a") =!= col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
       .agg(count(lit(1)).as("c"))
-      .filter(pround(col("c") / (col("na") + col("nb") - col("c")), 4)
-        >= DropThreshold)
+      .filter(jaccard4 >= DropThreshold)
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
               greatest(col("doc_a"), col("doc_b")).as("doc_b"))
       .distinct()
@@ -399,9 +456,15 @@ object Dedup {
     * on top of the signature machinery it shares with every other
     * minhash query.
     */
-  def sourceOverlap(s: SparkSession, d: String): DataFrame = {
-    val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
-    minhashPairs(s, d)
+  def sourceOverlap(s: SparkSession, d: String): DataFrame =
+    sourcePairCounts(minhashPairs(s, d), Tables.documents(s, d))
+
+  /** Near-dup pairs attributed to their sources and counted per
+    * unordered source pair — the tail both overlap matrices share.
+    */
+  private def sourcePairCounts(pairs: DataFrame, docs: DataFrame): DataFrame = {
+    val src = docs.select(col("doc_id"), col("source"))
+    pairs
       .join(src.select(col("doc_id").as("doc_a"), col("source").as("sa")), "doc_a")
       .join(src.select(col("doc_id").as("doc_b"), col("source").as("sb")), "doc_b")
       .groupBy(least(col("sa"), col("sb")).as("source_a"),
@@ -447,24 +510,8 @@ object Dedup {
                                            cap: Long): DataFrame = {
     val b = bandedOf(slotArrays(docs), bandGeometryOf(docs))
       .repartition(col("band"), col("sig"))
-    val keep = b.groupBy(col("band"), col("sig"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") <= cap)
-      .select(col("band"), col("sig"))
-    val kept = b.join(keep, Seq("band", "sig"))
-    val a = kept.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
-    val c = kept.select(col("doc_id").as("doc_b"), col("band"), col("sig"))
-    val pairs = a.join(c, Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    val src = docs.select(col("doc_id"), col("source"))
-    pairs
-      .join(src.select(col("doc_id").as("doc_a"), col("source").as("sa")), "doc_a")
-      .join(src.select(col("doc_id").as("doc_b"), col("source").as("sb")), "doc_b")
-      .groupBy(least(col("sa"), col("sb")).as("source_a"),
-               greatest(col("sa"), col("sb")).as("source_b"))
-      .agg(count(lit(1)).as("n_pairs"))
-      .orderBy(col("source_a"), col("source_b"))
+    sourcePairCounts(
+      pairsSharing(underCap(b, Seq("band", "sig"), cap), "band", "sig"), docs)
   }
 
   /** 64-bit tf-weighted SimHash per document. */
@@ -593,14 +640,8 @@ object Dedup {
     * it binds; the uncapped [[simhashPairsBlocked]] remains the
     * default, this is the bounded-worst-case knob.
     */
-  def simhashPairsCapped(s: SparkSession, d: String): DataFrame = {
-    val blocked = blockedTable(s, d)
-    val keep = blocked.groupBy(col("blk"), col("bv"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") <= OccCap)
-      .select(col("blk"), col("bv"))
-    simhashPairsFrom(blocked.join(keep, Seq("blk", "bv")))
-  }
+  def simhashPairsCapped(s: SparkSession, d: String): DataFrame =
+    simhashPairsFrom(underCap(blockedTable(s, d), Seq("blk", "bv"), OccCap))
 
   /** Exact n-gram Jaccard over candidate pairs that share a shingle.
     * Set sizes come MAP-SIDE from the fused GramRunStats expression
@@ -612,18 +653,8 @@ object Dedup {
     * DuckDB oracle re-checks every gate run). One shuffle total
     * before the pair aggregation, shared by both join sides.
     */
-  def ngramJaccard(s: SparkSession, d: String): DataFrame = {
-    val ngn = gramHashRows(s, d).repartition(col("gh"))
-    val a = ngn.select(col("doc_id").as("doc_a"), col("gh"), col("n").as("na"))
-    val b = ngn.select(col("doc_id").as("doc_b"), col("gh"), col("n").as("nb"))
-    a.join(b, Seq("gh")).filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("jaccard", pround(col("c") / (col("na") + col("nb") - col("c")), 4))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
+  def ngramJaccard(s: SparkSession, d: String): DataFrame =
+    jaccardPairs(gramHashRows(s, d).repartition(col("gh")))
 
   /** EXACT Jaccard ≥ [[DropThreshold]] pairs via AllPairs prefix
     * filtering (Bayardo et al., WWW'07; Chaudhuri et al., ICDE'06) —
@@ -669,19 +700,6 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** [[ngramPrefixJoinOf]] through the exact-collapse prepass —
-    * spec entry for the adaptive branch's side-for-side pin.
-    */
-  private[graft] def ngramPrefixCollapsedOf(docs: DataFrame): DataFrame = {
-    val groups = collapsedGroups(docs)
-    ngramPrefixOverGroups(
-      groups.select(col("rep").as("doc_id"), col("text")),
-      docs.select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
-        .join(groups.select(col("h"), col("rep"),
-          (size(tokens(col("text"))) >= 3).as("gramful")), Seq("h"))
-        .select(col("doc_id"), col("rep"), col("gramful")))
-  }
-
   /** Prefix-filtered exact Jaccard over explicit (reps, members)
     * frames — rep-level AllPairs join + closed-form member-pair
     * expansion:
@@ -699,12 +717,13 @@ object Dedup {
     * Scale: the expansion joins are output-proportional (pair
     * enumeration is output-bound on a clone rung for ANY algorithm);
     * the quadratic candidate space the direct plan drowned in is
-    * never touched.
+    * never touched. AdaptiveCollapseSpec forces each side through
+    * [[adaptiveGroups]] with a constant flag frame.
     */
-  private def ngramPrefixOverGroups(reps: DataFrame,
-                                    members: DataFrame,
-                                    repJoin: DataFrame => DataFrame =
-                                      ngramPrefixJoinOf): DataFrame = {
+  private[graft] def ngramPrefixOverGroups(reps: DataFrame,
+                                           members: DataFrame,
+                                           repJoin: DataFrame => DataFrame =
+                                             ngramPrefixJoinOf): DataFrame = {
     val repPairs = repJoin(gramHashRowsOf(reps))
     val mG = members.filter(col("gramful"))
     val within = mG.select(col("rep"), col("doc_id").as("doc_a"))
@@ -736,31 +755,12 @@ object Dedup {
       .filter(col("rn") <= col("n") - expr("(4 * n + 4) div 5") + 1)
       .select(col("doc_id"), col("gh"))
       .repartition(col("gh"))
-    prefix.select(col("doc_id").as("doc_a"), col("gh"))
-      .join(prefix.select(col("doc_id").as("doc_b"), col("gh")), Seq("gh"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    pairsSharing(prefix, "gh")
   }
 
-  private[graft] def ngramPrefixJoinOf(grams: DataFrame): DataFrame = {
-    val cand = prefixCandidatesOf(grams)
-    // exact verification of the candidate set against FULL gram sets
-    val ga = grams.select(col("doc_id").as("doc_a"), col("gh"), col("n").as("na"))
-    val gb = grams.select(col("doc_id").as("doc_b"), col("gh"), col("n").as("nb"))
-    cand.join(ga, "doc_a")
-      .join(gb, Seq("doc_b", "gh"))
-      .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("c"))
-      // accept on the EXACT rational predicate 5c ≥ 4(na+nb−c), not on
-      // pround(J,4) ≥ 0.8: the rounded form accepts true J ≥ 0.79995,
-      // but prefix-candidate completeness is proven only for J ≥ 0.8 —
-      // a pair in [0.79995, 0.8) could pass a rounded brute filter while
-      // missing from the prefix candidate set, breaking the exactness
-      // claim. Integer arithmetic keeps both engines boundary-identical.
-      .filter(col("c") * 5 >= (col("na") + col("nb") - col("c")) * 4)
-      .withColumn("jaccard", pround(col("c") / (col("na") + col("nb") - col("c")), 4))
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
+  /** Prefix candidates verified exactly against FULL gram sets. */
+  private[graft] def ngramPrefixJoinOf(grams: DataFrame): DataFrame =
+    exactVerified(prefixCandidatesOf(grams), grams)
 
   /** Distinct-text document-frequency cap for the BOUNDED prefix-twin
     * candidate stream ([[ngramPrefixCapped]]): grams carried by more
@@ -824,23 +824,7 @@ object Dedup {
   private[graft] def ngramDfCappedJoinOf(grams: DataFrame,
                                          cap: Long): DataFrame = {
     val g = grams.select(col("doc_id"), col("gh")).repartition(col("gh"))
-    val keep = g.groupBy(col("gh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= cap).select(col("gh"))
-    val posting = g.join(keep, Seq("gh"))
-    val cand = posting.select(col("doc_id").as("doc_a"), col("gh"))
-      .join(posting.select(col("doc_id").as("doc_b"), col("gh")), Seq("gh"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    val ga = grams.select(col("doc_id").as("doc_a"), col("gh"), col("n").as("na"))
-    val gb = grams.select(col("doc_id").as("doc_b"), col("gh"), col("n").as("nb"))
-    cand.join(ga, "doc_a")
-      .join(gb, Seq("doc_b", "gh"))
-      .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("c"))
-      // exact rational accept (the ngramPrefixJoinOf discipline)
-      .filter(col("c") * 5 >= (col("na") + col("nb") - col("c")) * 4)
-      .withColumn("jaccard", pround(col("c") / (col("na") + col("nb") - col("c")), 4))
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    exactVerified(pairsSharing(underCap(g, Seq("gh"), cap), "gh"), grams)
   }
 
   /** Span width for substring-level exact dedup: a duplicated region
@@ -917,14 +901,6 @@ object Dedup {
       .orderBy(col("doc_id"), col("span_start"))
   }
 
-  /** Per-document duplicated-token fraction — the quality signal a
-    * pipeline filters on ("how much of this doc is boilerplate"):
-    * total tokens inside [[substrSpans]] spans over total tokens.
-    * Spans are disjoint by construction (overlapping windows merged),
-    * so the sum is exact. Docs with no duplicated span are reported
-    * with dup_tokens = 0 — the join is a broadcast-friendly LEFT
-    * join of the (small) span summary onto the map-side token count.
-    */
   /** The ACTION step of substring dedup (Lee et al. 2022 drop the
     * duplicated span, keeping the surrounding text): every token
     * inside a duplicated span is removed and the remainder re-joined
@@ -966,6 +942,14 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
+  /** Per-document duplicated-token fraction — the quality signal a
+    * pipeline filters on ("how much of this doc is boilerplate"):
+    * total tokens inside [[substrSpans]] spans over total tokens.
+    * Spans are disjoint by construction (overlapping windows merged),
+    * so the sum is exact. Docs with no duplicated span are reported
+    * with dup_tokens = 0 — the join is a broadcast-friendly LEFT
+    * join of the (small) span summary onto the map-side token count.
+    */
   def substrStats(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val nTok = docs.select(col("doc_id"),
@@ -1094,22 +1078,15 @@ object Dedup {
       .orderBy(col("drop_id"))
   }
 
-  /** The direct (uncollapsed) drop list — every doc its own rep (the
-    * identity frames): band every document, verify LSH candidates
-    * against full gram rows, reduce greedily. Spec entry for the
-    * adaptive branch's side-for-side equality pin.
-    */
-  private[graft] def dropListDirectOf(docs: DataFrame, geom: DataFrame): DataFrame =
-    dropListOverGroups(docs.select(col("doc_id"), col("text")),
-      docs.select(col("doc_id"), col("doc_id").as("rep"),
-        (size(tokens(col("text"))) >= 3).as("gramful")),
-      geom)
-
-  /** [[dropList]] through the exact-collapse prepass (see
-    * [[componentsCollapsedOf]] for the equivalence argument's core:
-    * J(member, x) = J(rep, x)). The uncollapsed pair list is
-    * quadratic per clone group; here it is never materialized —
-    * member b's drop row derives in closed form from rep-level pairs:
+  /** The drop-list pipeline over explicit (reps, members) frames —
+    * `members` = (doc_id, rep, gramful), both from [[adaptiveGroups]]
+    * (AdaptiveCollapseSpec forces each side with a constant flag
+    * frame): band the reps, verify LSH candidates exactly
+    * ([[lshRepPairs]]), then derive each member's drop row in closed
+    * form from rep-level pairs. The uncollapsed pair list is
+    * quadratic per clone group; here it is never materialized
+    * (J(member, x) = J(rep, x), see [[componentsCollapsedOf]]) —
+    * member b's drop row derives from rep-level pairs:
     *  - a within-group pair at J = 1 exists below b iff b is not its
     *    group's rep (the rep is the group minimum);
     *  - a cross-group pair (a, b) with a < b exists iff b's rep has a
@@ -1118,45 +1095,18 @@ object Dedup {
     *    itself is real), contributing kept candidate r* at the rep
     *    pair's jaccard.
     * kept_id = min over those candidates = min doc_a over the
-    * uncollapsed pairs; max_jaccard likewise. The DuckDB oracle still
-    * replays the UNCOLLAPSED derivation, so the gate checks the
-    * equivalence. Scale shape: the symmetric rep-pair list is tiny
-    * (near-dup pairs among distinct texts), so the member join is a
-    * broadcast — the whole query is the exact-dedup groupBy plus
+    * uncollapsed pairs; max_jaccard likewise. Identity members
+    * (rep = doc_id) make `within` empty and `cross` the plain per-pair
+    * reduction, so the direct plan is this same pipeline. The DuckDB
+    * oracle still replays the UNCOLLAPSED derivation, so the gate
+    * checks the equivalence. Scale shape: the symmetric rep-pair list
+    * is tiny (near-dup pairs among distinct texts), so the member join
+    * is a broadcast — the whole query is the exact-dedup groupBy plus
     * map-side work.
     */
-  private[graft] def dropListCollapsedOf(docs: DataFrame,
-                                         geom: DataFrame): DataFrame = {
-    val groups = collapsedGroups(docs)
-    dropListOverGroups(
-      groups.select(col("rep").as("doc_id"), col("text")),
-      docs.select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
-        .join(groups.select(col("h"), col("rep"),
-          (size(tokens(col("text"))) >= 3).as("gramful")), Seq("h"))
-        .select(col("doc_id"), col("rep"), col("gramful")),
-      geom)
-  }
-
-  /** The drop-list pipeline over explicit (reps, members) frames —
-    * shared verbatim by the collapsed, direct and runtime-adaptive
-    * forms (see [[adaptiveGroups]]): band the reps, verify LSH
-    * candidates exactly, then derive each member's drop row in closed
-    * form from rep-level pairs. `members` = (doc_id, rep, gramful);
-    * identity members (rep = doc_id) make `within` empty and `cross`
-    * the plain per-pair reduction, so the direct plan is this same
-    * pipeline.
-    */
-  private def dropListOverGroups(reps: DataFrame, members: DataFrame,
-                                 geom: DataFrame): DataFrame = {
-    val bands = bandedOf(slotArrays(reps), geom)
-      .repartition(col("band"), col("sig"))
-    val cand = bands.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
-      .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    val repPairs = verifiedPairsOver(cand, gramHashRowsOf(reps))
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+  private[graft] def dropListOverGroups(reps: DataFrame, members: DataFrame,
+                                        geom: DataFrame): DataFrame = {
+    val repPairs = lshRepPairs(reps, geom)
     val sym = repPairs.select(col("doc_a").as("rep"), col("doc_b").as("r_other"),
         col("jaccard"))
       .unionByName(repPairs.select(col("doc_b").as("rep"),
@@ -1176,23 +1126,29 @@ object Dedup {
       .agg(min(col("kept_cand")).as("kept_id"), max(col("j")).as("max_jaccard"))
   }
 
-  /** LSH candidate pairs exact-Jaccard-verified at [[DropThreshold]]:
-    * (doc_a < doc_b, jaccard) — the near-dup edge set [[dropList]]
+  /** The LSH rep-pair chain shared by the drop list and the
+    * components: band the reps under `geom`, pair them on shared
+    * (band, sig) buckets, verify exactly at [[DropThreshold]] —
+    * (doc_a < doc_b, jaccard), the near-dup edge set [[dropList]]
     * reduces greedily and [[components]] closes transitively.
     */
-  private def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    verifiedPairsOver(minhashPairs(s, d), gramHashRows(s, d))
+  private def lshRepPairs(reps: DataFrame, geom: DataFrame): DataFrame = {
+    val bands = bandedOf(slotArrays(reps), geom)
+      .repartition(col("band"), col("sig"))
+    verifiedPairsOver(pairsSharing(bands, "band", "sig"), gramHashRowsOf(reps))
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+  }
 
   /** Exact-Jaccard verification of an explicit candidate pair set
-    * against gram rows — the verify stage of [[verifiedPairs]],
-    * factored so the incremental path ([[componentsIncOf]]) and the
-    * index builder ([[buildDedupGraphIndex]]) verify THEIR candidate
-    * sets through the identical arithmetic. The inner joins restrict
-    * gram movement to candidate endpoints by themselves; production
-    * layouts additionally prune the gram scan by doc-partitioned
-    * storage.
+    * against gram rows at the ROUNDED accept pround(J, 4) ≥
+    * [[DropThreshold]] (the drop-list/components oracles' rule) —
+    * shared by [[lshRepPairs]], the incremental path
+    * ([[componentsIncOf]]) and the index builder
+    * ([[buildDedupGraphIndex]]), so every candidate set is verified
+    * through the identical arithmetic. Production layouts
+    * additionally prune the gram scan by doc-partitioned storage.
     */
-  private def verifiedPairsOver(cand: DataFrame, grams: DataFrame): DataFrame = {
+  private def verifiedPairsOver(cand: DataFrame, grams: DataFrame): DataFrame =
     // A PPJoin-style length prefilter (5·na ≥ 4·nb ∧ 5·nb ≥ 4·na,
     // exact for J ≥ 0.8) was measured here in round 12 and REMOVED:
     // at the gate SF the corpus' docs are too similar in length for
@@ -1200,16 +1156,9 @@ object Dedup {
     // sets are small and 4×4-banded (t* ≈ 0.71) so sub-threshold
     // candidate mass is already minor — the extra sizes aggregate +
     // two joins cost more than they saved at every measured rung.
-    val aSide = grams.select(col("doc_id").as("doc_a"), col("gh"), col("n").as("na"))
-    val bSide = grams.select(col("doc_id").as("doc_b"), col("gh"), col("n").as("nb"))
-    cand
-      .join(aSide, "doc_a")
-      .join(bSide, Seq("doc_b", "gh"))
-      .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("jaccard", pround(col("c") / (col("na") + col("nb") - col("c")), 4))
+    overlapCounts(cand, grams)
+      .withColumn("jaccard", jaccard4)
       .filter(col("jaccard") >= DropThreshold)
-  }
 
   /** Label-propagation rounds for [[components]]: 4 fixed rounds find
     * the exact min-id component label for any component of DIAMETER
@@ -1274,15 +1223,7 @@ object Dedup {
   private[graft] def componentsCollapsedOf(docs: DataFrame,
                                            geom: DataFrame): DataFrame = {
     val groups = collapsedGroups(docs)
-    val reps = groups.select(col("rep").as("doc_id"), col("text"))
-    val bands = bandedOf(slotArrays(reps), geom)
-      .repartition(col("band"), col("sig"))
-    val cand = bands.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
-      .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    val repPairs = verifiedPairsOver(cand, gramHashRowsOf(reps))
+    val repPairs = lshRepPairs(groups.select(col("rep").as("doc_id"), col("text")), geom)
       .select(col("doc_a"), col("doc_b"))
     expandRepLabels(docs, groups, componentsOf(repPairs))
   }
@@ -1418,19 +1359,6 @@ object Dedup {
                                     geom: DataFrame): DataFrame =
     bandedOf(slotArrays(docs.select(col("doc_id"), col("text"))), geom)
 
-  /** One-shot dedup-graph index build: freeze to parquet under `path`
-    *  - `bands`  — the LSH band signatures of `docs` (the probe table
-    *               tomorrow's ingest joins against),
-    *  - `pairs`  — the verified near-dup pair list (edge set), and
-    *  - `labels` — its connected-component labels.
-    * This is the artifact a 100 TB pipeline materializes ONCE and
-    * serves many policies from (keep-best, drop lists, overlap
-    * audits), instead of re-deriving LSH → verify → label rounds
-    * in-plan per query — and the state tomorrow's batch merges into
-    * ([[componentsIncOf]]) without rescanning the historical corpus.
-    * Each stage reads its predecessor's frozen parquet, so the saved
-    * artifacts are self-consistent by construction.
-    */
   /** Text-group frame shared by the collapsed plans: one row per
     * distinct text — (h = md5, rep = min member doc_id, n_copies,
     * text). Grouped on the 16-byte md5, NEVER the raw text (the
@@ -1503,14 +1431,6 @@ object Dedup {
         countDistinct(md5(col("text").cast("binary"))).as("nd"))
       .filter(col("n") >= 0 && col("nd") >= 0)
 
-  /** [[bandGeometryOf]]'s formula over an explicit stats row. */
-  private def geomOfStats(stats: DataFrame): DataFrame =
-    stats.select(
-      when(col("n") <= AdaptSmallMax, lit(2L))
-        .otherwise(lit(BandRows.toLong)).as("r"),
-      when(col("n") <= AdaptSmallMax, lit(MinhashK.toLong / 2))
-        .otherwise(lit(MinhashK.toLong / BandRows)).as("nb"))
-
   private def flagOfStats(stats: DataFrame): DataFrame =
     stats.select((col("n") >= col("nd") * lit(CollapseWorthItCopies))
       .as("collapse"))
@@ -1520,6 +1440,12 @@ object Dedup {
     */
   private[graft] def dupMassFlag(docs: DataFrame): DataFrame =
     flagOfStats(corpusStats(docs))
+
+  /** `gramful`: the text yields ≥ 1 word-3-gram shingle. Clones of a
+    * shorter text share no grams, so the uncollapsed join never pairs
+    * them and no collapsed closed form may either.
+    */
+  private val gramful = (size(tokens(col("text"))) >= 3).as("gramful")
 
   /** Corpus-adaptive (reps, members) frames — the exact-collapse
     * prepass as a RUNTIME branch folded into ONE downstream pipeline.
@@ -1537,12 +1463,12 @@ object Dedup {
     * member-expansion joins no-ops, so the direct side degenerates to
     * exactly the uncollapsed plan's semantics. Output-equivalence of
     * the two sides is the documented J(clone, x) = J(rep, x) argument;
-    * AdaptiveCollapseSpec pins side-for-side equality on planted
-    * corpora that force each side, and the gate's UNCOLLAPSED oracle
-    * checks whichever side the gate corpus selects.
+    * AdaptiveCollapseSpec pins side-for-side equality by passing a
+    * constant `flag` frame that forces each side, and the gate's
+    * UNCOLLAPSED oracle checks whichever side the gate corpus selects.
     */
-  private def adaptiveGroups(docs: DataFrame,
-                             flag: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def adaptiveGroups(docs: DataFrame,
+                                    flag: DataFrame): (DataFrame, DataFrame) = {
     val docsC = docs.crossJoin(broadcast(flag))
       .filter(col("collapse")).drop("collapse")
     val docsD = docs.crossJoin(broadcast(flag))
@@ -1552,11 +1478,9 @@ object Dedup {
       .unionByName(docsD.select(col("doc_id"), col("text")))
     val members = docsC
       .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
-      .join(groups.select(col("h"), col("rep"),
-        (size(tokens(col("text"))) >= 3).as("gramful")), Seq("h"))
+      .join(groups.select(col("h"), col("rep"), gramful), Seq("h"))
       .select(col("doc_id"), col("rep"), col("gramful"))
-      .unionByName(docsD.select(col("doc_id"), col("doc_id").as("rep"),
-        (size(tokens(col("text"))) >= 3).as("gramful")))
+      .unionByName(docsD.select(col("doc_id"), col("doc_id").as("rep"), gramful))
     (reps, members)
   }
 
@@ -1581,8 +1505,8 @@ object Dedup {
     // absent here too; `gramful` is a map-side token count over the
     // one group row, no join); unlabeled singleton → absent.
     docs.select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
-      .join(groups.select(col("h"), col("rep"), col("n_copies"),
-        (size(tokens(col("text"))) >= 3).as("gramful")), Seq("h"))
+      .join(groups.select(col("h"), col("rep"), col("n_copies"), gramful),
+        Seq("h"))
       .join(repLabels.withColumnRenamed("doc_id", "rep"), Seq("rep"), "left")
       .select(col("doc_id"),
         coalesce(col("component_id"),
@@ -1590,6 +1514,19 @@ object Dedup {
           .as("component_id"))
       .filter(col("component_id").isNotNull)
 
+  /** One-shot dedup-graph index build: freeze to parquet under `path`
+    *  - `bands`  — the LSH band signatures of `docs` (the probe table
+    *               tomorrow's ingest joins against),
+    *  - `pairs`  — the verified near-dup pair list (edge set), and
+    *  - `labels` — its connected-component labels.
+    * This is the artifact a 100 TB pipeline materializes ONCE and
+    * serves many policies from (keep-best, drop lists, overlap
+    * audits), instead of re-deriving LSH → verify → label rounds
+    * in-plan per query — and the state tomorrow's batch merges into
+    * ([[componentsIncOf]]) without rescanning the historical corpus.
+    * Each stage reads its predecessor's frozen parquet, so the saved
+    * artifacts are self-consistent by construction.
+    */
   private[graft] def buildDedupGraphIndex(s: SparkSession, docs: DataFrame,
       path: String, geom: DataFrame = null): Unit = {
     val g = Option(geom).getOrElse(bandGeometryOf(docs))
@@ -1604,12 +1541,7 @@ object Dedup {
     minhashBandsOf(reps, loadGraphGeom(s, path))
       .write.mode("overwrite").parquet(s"$path/bands")
     val saved = loadGraphBands(s, path).repartition(col("band"), col("sig"))
-    val cand = saved.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
-      .join(saved.select(col("doc_id").as("doc_b"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    verifiedPairsOver(cand, gramHashRowsOf(reps))
+    verifiedPairsOver(pairsSharing(saved, "band", "sig"), gramHashRowsOf(reps))
       .write.mode("overwrite").parquet(s"$path/pairs")
     expandRepLabels(docs, groups,
         componentsOf(s.read.schema("doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE")
@@ -1940,6 +1872,28 @@ object Dedup {
        |              ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
        |       FROM hb GROUP BY doc_id)""".stripMargin
 
+  /** The uncollapsed LSH candidate → exact-overlap CTE chain both
+    * near-dup graph oracles replay: minhash, adaptive bands, distinct
+    * (band, sig)-sharing `pairs`, per-doc gram `sizes`, and
+    * `verified` (doc_a, doc_b, na, nb, c) — the SQL mirror of
+    * [[lshRepPairs]] before its accept rule.
+    */
+  private val verifiedCte =
+    s"""$mhCte,
+       |$bandsCteSql,
+       |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |          FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig
+       |          WHERE a.doc_id < b.doc_id),
+       |sizes AS (SELECT doc_id, count(*) AS n FROM ng GROUP BY doc_id),
+       |verified AS (
+       |  SELECT p.doc_a, p.doc_b, na.n AS na, nb.n AS nb, count(*) AS c
+       |  FROM pairs p
+       |  JOIN ng x ON x.doc_id = p.doc_a
+       |  JOIN ng y ON y.doc_id = p.doc_b AND y.g = x.g
+       |  JOIN sizes na ON na.doc_id = p.doc_a
+       |  JOIN sizes nb ON nb.doc_id = p.doc_b
+       |  GROUP BY 1, 2, 3, 4)""".stripMargin
+
   /** The full dedup_components oracle — also embedded verbatim as a
     * CTE by the dedup_keep_best oracle, so both gates replay the
     * IDENTICAL unrolled label propagation (relax + shortcut rounds
@@ -1954,20 +1908,7 @@ object Dedup {
       s"""l$i AS MATERIALIZED (SELECT e.dst AS v, min(l.lab) AS lab
          |  FROM edges_s e JOIN $prev l ON e.src = l.v GROUP BY e.dst)""".stripMargin
     }.mkString(",\n")
-    s"""WITH $mhCte,
-       |$bandsCteSql,
-       |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |          FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig
-       |          WHERE a.doc_id < b.doc_id),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM ng GROUP BY doc_id),
-       |verified AS (
-       |  SELECT p.doc_a, p.doc_b, na.n AS na, nb.n AS nb, count(*) AS c
-       |  FROM pairs p
-       |  JOIN ng x ON x.doc_id = p.doc_a
-       |  JOIN ng y ON y.doc_id = p.doc_b AND y.g = x.g
-       |  JOIN sizes na ON na.doc_id = p.doc_a
-       |  JOIN sizes nb ON nb.doc_id = p.doc_b
-       |  GROUP BY 1, 2, 3, 4),
+    s"""WITH $verifiedCte,
        |vp AS (SELECT doc_a, doc_b FROM verified
        |       WHERE pround(c / (na + nb - c), 4) >= $DropThreshold),
        |edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM vp
@@ -1987,20 +1928,7 @@ object Dedup {
     * banding/verify/greedy-reduce derivation.
     */
   private lazy val DropListOracleSql: String =
-    s"""WITH $mhCte,
-       |$bandsCteSql,
-       |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |          FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig
-       |          WHERE a.doc_id < b.doc_id),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM ng GROUP BY doc_id),
-       |verified AS (
-       |  SELECT p.doc_a, p.doc_b, na.n AS na, nb.n AS nb, count(*) AS c
-       |  FROM pairs p
-       |  JOIN ng x ON x.doc_id = p.doc_a
-       |  JOIN ng y ON y.doc_id = p.doc_b AND y.g = x.g
-       |  JOIN sizes na ON na.doc_id = p.doc_a
-       |  JOIN sizes nb ON nb.doc_id = p.doc_b
-       |  GROUP BY 1, 2, 3, 4)
+    s"""WITH $verifiedCte
        |SELECT doc_b AS drop_id, min(doc_a) AS kept_id,
        |  max(pround(c / (na + nb - c), 4)) AS max_jaccard
        |FROM verified

@@ -1,15 +1,18 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
 
 /** Pins for the duplicate-mass-adaptive plan branch
-  * (`Dedup.branchByDupMass`, used by `dedup_drop_list` and
-  * `dedup_ngram_prefix`): the two branches must be output-equivalent
-  * on ANY corpus (the branched query itself is checked on whichever
-  * side the gate corpus selects — here each side is FORCED by planted
-  * clone mass and compared against the other's plan), the flag must
+  * (`Dedup.adaptiveGroups`, used by `dedup_drop_list`,
+  * `dedup_ngram_prefix` and `dedup_ngram_prefix_capped`): the two
+  * branches must be output-equivalent on ANY corpus (the branched
+  * query itself is checked on whichever side the gate corpus selects —
+  * here each side is FORCED through the production branch by a
+  * constant `collapse` flag frame and compared against the other
+  * side, on planted clone-light and clone-heavy corpora), the flag must
   * flip exactly at the documented boundary, and the degenerate
   * short-clone corpus (duplicated <3-token texts, which share no
   * shingles with their own clones) must produce NOTHING on either
@@ -44,8 +47,25 @@ class AdaptiveCollapseSpec extends AnyFunSuite {
     (0 until 5).map(k => (id + 100L * k, t))
   }
 
-  private def pairsOf(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+  private def pairsOf(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
+
+  /** (reps, members) of `docs` with the branch forced to one side. */
+  private def forcedGroups(docs: DataFrame, collapse: Boolean) = {
+    val s = spark
+    import s.implicits._
+    Dedup.adaptiveGroups(docs, Seq(collapse).toDF("collapse"))
+  }
+
+  private def dropListForced(docs: DataFrame, geom: DataFrame, collapse: Boolean) = {
+    val (reps, members) = forcedGroups(docs, collapse)
+    Dedup.dropListOverGroups(reps, members, geom)
+  }
+
+  private def prefixJoinForced(docs: DataFrame, collapse: Boolean) = {
+    val (reps, members) = forcedGroups(docs, collapse)
+    Dedup.ngramPrefixOverGroups(reps, members)
+  }
 
   test("dup-mass flag flips at the documented copies-per-text boundary") {
     val s = spark
@@ -65,8 +85,8 @@ class AdaptiveCollapseSpec extends AnyFunSuite {
       val docs = graft.sources.Tables.documents(spark, dir)
       val geom = Dedup.bandGeometryOf(docs)
       val branched = pairsOf(Dedup.dropList(spark, dir))
-      val direct = pairsOf(Dedup.dropListDirectOf(docs, geom))
-      val collapsed = pairsOf(Dedup.dropListCollapsedOf(docs, geom))
+      val direct = pairsOf(dropListForced(docs, geom, collapse = false))
+      val collapsed = pairsOf(dropListForced(docs, geom, collapse = true))
       assert(direct == collapsed,
         s"the two branch plans disagree on ${corpus.size} docs:\n" +
           s"only-direct ${direct -- collapsed}\nonly-collapsed ${collapsed -- direct}")
@@ -81,7 +101,7 @@ class AdaptiveCollapseSpec extends AnyFunSuite {
       val docs = graft.sources.Tables.documents(spark, dir)
       val branched = pairsOf(Dedup.ngramPrefixJoin(spark, dir))
       val direct = pairsOf(Dedup.ngramPrefixJoinOf(Dedup.gramHashRowsOf(docs)))
-      val collapsed = pairsOf(Dedup.ngramPrefixCollapsedOf(docs))
+      val collapsed = pairsOf(prefixJoinForced(docs, collapse = true))
       assert(direct == collapsed,
         s"only-direct ${direct -- collapsed}\nonly-collapsed ${collapsed -- direct}")
       assert(branched == direct)
@@ -100,9 +120,9 @@ class AdaptiveCollapseSpec extends AnyFunSuite {
     val docs = graft.sources.Tables.documents(spark, dir)
     val geom = Dedup.bandGeometryOf(docs)
     assert(Dedup.dropList(spark, dir).isEmpty)
-    assert(Dedup.dropListCollapsedOf(docs, geom).isEmpty)
+    assert(dropListForced(docs, geom, collapse = true).isEmpty)
     assert(Dedup.ngramPrefixJoin(spark, dir).isEmpty)
-    assert(Dedup.ngramPrefixCollapsedOf(docs).isEmpty)
+    assert(prefixJoinForced(docs, collapse = true).isEmpty)
     assert(Dedup.components(spark, dir).isEmpty,
       "short clones must not form components (they share no grams)")
     // and a MIXED corpus keeps the long-text component while still
