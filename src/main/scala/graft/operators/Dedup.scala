@@ -1541,7 +1541,9 @@ object Dedup {
     minhashBandsOf(reps, loadGraphGeom(s, path))
       .write.mode("overwrite").parquet(s"$path/bands")
     val saved = loadGraphBands(s, path).repartition(col("band"), col("sig"))
+    // the edge set keeps only what its reader declares
     verifiedPairsOver(pairsSharing(saved, "band", "sig"), gramHashRowsOf(reps))
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .write.mode("overwrite").parquet(s"$path/pairs")
     expandRepLabels(docs, groups,
         componentsOf(s.read.schema("doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE")

@@ -17,8 +17,15 @@ import graft.functions.CrossEngine.{portableHash, pround, tokens}
   *    oracle); search touches only the probe's bucket — this is the
   *    100 TB path (bucket count scales with corpus size).
   *
-  * Cosine is computed with `zip_with`+`aggregate` (codegen'd fold —
-  * no UDF); ranking uses pround(cos, 6) with vec_id tie-break so the
+  * Every probe-bounded search (brute, LSH, IVF, IVF-PQ) is one
+  * filter-and-refine skeleton, each stage written once: the probe set
+  * ([[probesOf]]) → its nearest coarse lists ([[probeLists]]) → an
+  * ADC shortlist inside them ([[adcSearch]]) → the exact-cosine
+  * rerank ([[rerank]]). A search skips the stages it has no index
+  * for; the oracle SQL builds each stage from one string as well.
+  *
+  * Cosine is the codegen'd dot product over precomputed norms (no
+  * UDF); ranking uses pround(cos, 6) with vec_id tie-break so the
   * ordering is engine-stable.
   */
 object Similarity {
@@ -65,54 +72,83 @@ object Similarity {
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm", sqrt(graft.functions.DotProduct.dot_product(col("v"), col("v"))))
 
+  // --- The shared ANN stages (the skeleton in the object scaladoc);
+  // callers pass only what differs: list count, carried columns, ADC
+  // key, output columns.
+
+  /** The probe set (vec_id < [[ProbeCount]]) as (query_id, qv, qnrm),
+    * then `carry`.
+    */
+  private def probesOf(e: DataFrame, carry: Column*): DataFrame =
+    e.filter(col("vec_id") < ProbeCount)
+      .select(Seq(col("vec_id").as("query_id"), col("v").as("qv"),
+        col("nrm").as("qnrm")) ++ carry: _*)
+
+  /** Sign-projection bucket of `v` over the fixed [[NumPlanes]] planes. */
+  private def signBucket: Column =
+    (0 until NumPlanes).map(p =>
+      when(dot(col("v"), signArray(p)) >= 0, 1 << p).otherwise(0))
+      .reduce(_ + _)
+
+  /** Each probe's `n` nearest coarse lists by (pround(pcos, 6) desc,
+    * cid), projected to `out`; probes and centroids (cid, cv, cnrm)
+    * are both broadcast.
+    */
+  private def probeLists(probes: DataFrame, cents: DataFrame, n: Int,
+                         out: String*): DataFrame = {
+    val wp = Window.partitionBy(col("query_id"))
+      .orderBy(pround(col("pcos"), 6).desc, col("cid"))
+    broadcast(probes).crossJoin(broadcast(cents))
+      .withColumn("pcos", dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
+      .withColumn("prnk", row_number().over(wp))
+      .filter(col("prnk") <= n)
+      .select(out.map(col): _*)
+  }
+
+  /** Each query's top `k` rows by (pround(score, 6) desc, neighbor_id),
+    * projected to `cols` and ordered by (query_id, rank).
+    */
+  private def topPerQuery(cand: DataFrame, score: String, k: Int,
+                          cols: Column*): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(pround(col(score), 6).desc, col("neighbor_id"))
+    cand.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(cols: _*)
+      .orderBy(col("query_id"), col("rank"))
+  }
+
+  /** Exact-cosine rerank: [[topPerQuery]] on `cos` over candidate rows
+    * carrying (query_id, qv, qnrm, neighbor_id, v, nrm).
+    */
+  private def rerank(cand: DataFrame, k: Int, cols: Column*): DataFrame =
+    topPerQuery(cand.withColumn("cos",
+      dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))), "cos", k, cols: _*)
+
+  private def cosSim: Column = pround(col("cos"), 4).as("cos_sim")
+
   /** Exact cosine top-k for probe vectors (vec_id < 10). */
   def annBrute(s: SparkSession, d: String): DataFrame = {
     val e = vectors(s, d)
-    val q = e.filter(col("vec_id") < ProbeCount)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
     val c = e.select(col("vec_id").as("neighbor_id"), col("label"), col("v"), col("nrm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(pround(col("cos"), 6).desc, col("neighbor_id"))
-    broadcast(q).join(c, col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-              pround(col("cos"), 4).as("cos_sim"), col("label"))
-      .orderBy(col("query_id"), col("rank"))
+    rerank(broadcast(probesOf(e)).join(c, col("neighbor_id") =!= col("query_id")),
+      TopK, col("query_id"), col("rank"), col("neighbor_id"), cosSim, col("label"))
   }
 
   /** Per-vector LSH bucket id (the index build of the ANN pipeline). */
   def lshBuckets(s: SparkSession, d: String): DataFrame =
     vectors(s, d)
-      .withColumn("bucket",
-        (0 until NumPlanes).map(p =>
-          when(dot(col("v"), signArray(p)) >= 0, 1 << p).otherwise(0))
-          .reduce(_ + _))
+      .withColumn("bucket", signBucket)
       .select(col("vec_id"), col("label"), col("bucket"))
       .orderBy(col("vec_id"))
 
   /** ANN via bucket-restricted search: probe joins only its bucket. */
   def annLsh(s: SparkSession, d: String): DataFrame = {
-    val b = vectors(s, d)
-      .withColumn("bucket",
-        (0 until NumPlanes).map(p =>
-          when(dot(col("v"), signArray(p)) >= 0, 1 << p).otherwise(0))
-          .reduce(_ + _))
-    val q = b.filter(col("vec_id") < ProbeCount)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-              col("nrm").as("qnrm"), col("bucket"))
+    val b = vectors(s, d).withColumn("bucket", signBucket)
     val c = b.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm"), col("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(pround(col("cos"), 6).desc, col("neighbor_id"))
-    broadcast(q).join(c, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= LshTopK)
-      .select(col("query_id"), col("bucket"), col("rank"), col("neighbor_id"),
-              pround(col("cos"), 4).as("cos_sim"))
-      .orderBy(col("query_id"), col("rank"))
+    rerank(broadcast(probesOf(b, col("bucket"))).join(c, Seq("bucket"))
+        .filter(col("neighbor_id") =!= col("query_id")),
+      LshTopK, col("query_id"), col("bucket"), col("rank"), col("neighbor_id"), cosSim)
   }
 
   /** Multi-probe ANN — the recall lever of the sign-LSH path at a
@@ -130,30 +166,17 @@ object Similarity {
     * measured floors.
     */
   def annLshMultiProbe(s: SparkSession, d: String): DataFrame = {
-    val b = vectors(s, d)
-      .withColumn("bucket",
-        (0 until NumPlanes).map(p =>
-          when(dot(col("v"), signArray(p)) >= 0, 1 << p).otherwise(0))
-          .reduce(_ + _))
+    val b = vectors(s, d).withColumn("bucket", signBucket)
     val masks = array((lit(0) +: (0 until NumPlanes).map(p => lit(1 << p))): _*)
-    val q = b.filter(col("vec_id") < ProbeCount)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-              col("nrm").as("qnrm"), col("bucket").as("home"))
+    val q = probesOf(b, col("bucket").as("home"))
       .withColumn("m", explode(masks))
       .select(col("query_id"), col("qv"), col("qnrm"),
               expr("home ^ m").as("bucket"))
     val c = b.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm"),
                      col("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(pround(col("cos"), 6).desc, col("neighbor_id"))
-    broadcast(q).join(c, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= LshTopK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-              pround(col("cos"), 4).as("cos_sim"))
-      .orderBy(col("query_id"), col("rank"))
+    rerank(broadcast(q).join(c, Seq("bucket"))
+        .filter(col("neighbor_id") =!= col("query_id")),
+      LshTopK, col("query_id"), col("rank"), col("neighbor_id"), cosSim)
   }
 
   /** Per-probe recall@[[LshTopK]] of an approximate ANN surface
@@ -297,20 +320,14 @@ object Similarity {
               col("v").as("pv"), col("nrm").as("pnrm"))
     val cands = e.select(col("vec_id").as("neighbor_id"), col("q"), col("scale"),
                          col("qnorm"), col("v"), col("nrm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(pround(col("qcos"), 6).desc, col("neighbor_id"))
-    broadcast(probes).join(cands, col("neighbor_id") =!= col("query_id"))
-      .withColumn("qcos",
-        dot(col("pq"), col("q")) / (col("pscale") * col("scale"))
-          / (col("pqnorm") * col("qnorm")))
-      .withColumn("cos", dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= LshTopK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-              pround(col("qcos"), 4).as("qcos_sim"),
-              pround(col("cos"), 4).as("cos_sim"),
-              (abs(col("qcos") - col("cos")) <= 0.05).as("err_ok"))
-      .orderBy(col("query_id"), col("rank"))
+    topPerQuery(broadcast(probes).join(cands, col("neighbor_id") =!= col("query_id"))
+        .withColumn("qcos",
+          dot(col("pq"), col("q")) / (col("pscale") * col("scale"))
+            / (col("pqnorm") * col("qnorm")))
+        .withColumn("cos", dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))),
+      "qcos", LshTopK, col("query_id"), col("rank"), col("neighbor_id"),
+      pround(col("qcos"), 4).as("qcos_sim"), cosSim,
+      (abs(col("qcos") - col("cos")) <= 0.05).as("err_ok"))
   }
 
   private val ProjDims = 8
@@ -381,6 +398,11 @@ object Similarity {
       .filter(col("vec_id") % col("stride") === 0)
       .drop("stride")
 
+  /** The sampled coarse centroids as (cid, cv, cnrm). */
+  private def centroidsOf(e: DataFrame): DataFrame =
+    sampledVecs(e)
+      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
+
   /** IVF index build: deterministic coarse centroids (every 50th
     * vector — the sampling stand-in for k-means), each vector assigned
     * to its nearest centroid. Centroids broadcast; one codegen'd pass
@@ -439,16 +461,11 @@ object Similarity {
     ivfAssignmentOf(vectors(s, d))
 
   private def ivfAssignmentOf(e: DataFrame): DataFrame =
-    assignAgainst(e, sampledVecs(e)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm")))
+    assignAgainst(e, centroidsOf(e))
 
   /** IVF search: probe the nprobe nearest centroid lists only. */
-  def annIvf(s: SparkSession, d: String): DataFrame = {
-    val e = vectors(s, d)
-    val cents = sampledVecs(e)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
-    ivfSearch(s, d, cents, ivfAssignment(s, d))
-  }
+  def annIvf(s: SparkSession, d: String): DataFrame =
+    ivfSearch(s, d, centroidsOf(vectors(s, d)), ivfAssignment(s, d))
 
   /** IVF search against trained (Lloyd) centroids — same plan shape
     * as [[annIvf]] (spec-asserted), only the centroid table differs.
@@ -749,9 +766,9 @@ object Similarity {
   /** Codeword/centroid id ceiling (2³⁸ − 1) of the packed argmins. */
   private val KidMax = (1L << 38) - 1
 
-  /** Squared Euclidean distance between the slice and the codeword. */
-  private def sliceD2: Column =
-    dot(col("sv"), col("sv")) - lit(2.0) * dot(col("sv"), col("kv")) +
+  /** Squared Euclidean distance between slice `sv` and the codeword kv. */
+  private def sliceD2(sv: String): Column =
+    dot(col(sv), col(sv)) - lit(2.0) * dot(col(sv), col("kv")) +
       dot(col("kv"), col("kv"))
 
   /** Nearest codeword per (vector, subspace), NARROW: (vec_id, m,
@@ -778,7 +795,7 @@ object Similarity {
   /** (vec_id, m, kid, d2): every slice against its subspace's codewords. */
   private def codeD2(sub: DataFrame, cb: DataFrame): DataFrame =
     sub.join(broadcast(cb), Seq("m"))
-      .select(col("vec_id"), col("m"), col("kid"), sliceD2.as("d2"))
+      .select(col("vec_id"), col("m"), col("kid"), sliceD2("sv").as("d2"))
 
   /** [[assignCodesNarrow]] with the slice payload re-attached — the
     * TRAINING form (the Lloyd round's mean needs sv back). The
@@ -881,9 +898,7 @@ object Similarity {
     val cb = trainPqCodebooks(en)
     val codes = assignCodesBounded(subVectors(en), cb)
     val coarse = ivfAssignmentOf(e).select(col("vec_id"), col("cid"))
-    val cents = sampledVecs(e)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
-    ivfPqSearchFrom(e, cb, codes, coarse, cents)
+    ivfPqSearchFrom(e, cb, codes, coarse, centroidsOf(e))
   }
 
   /** The SEARCH stage of IVF-PQ, parametrized by the four index
@@ -901,56 +916,52 @@ object Similarity {
     */
   private[graft] def ivfPqSearchFrom(e: DataFrame, cb: DataFrame,
       codes: DataFrame, coarse: DataFrame, cents: DataFrame): DataFrame = {
-    val probes = e.filter(col("vec_id") < ProbeCount)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(pround(col("pcos"), 6).desc, col("cid"))
-    val probeLists = broadcast(probes).crossJoin(broadcast(cents))
-      .withColumn("pcos", dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
-      .withColumn("prnk", row_number().over(wp))
-      .filter(col("prnk") <= PqNProbe)
-      .select(col("query_id"), col("cid"))
-
-    // per-probe ADC distance table: exact NORMALIZED probe slice vs
-    // codeword (same space as the codes)
-    val dtab = subVectors(
+    val probes = probesOf(e)
+    // per-probe ADC slices: exact NORMALIZED probe slice (same space
+    // as the codes)
+    val slices = subVectors(
         probes.select(col("query_id").as("vec_id"),
           transform(col("qv"), x => x / col("qnrm")).as("v")))
       .select(col("vec_id").as("query_id"), col("m"), col("sv").as("qsv"))
-      .join(broadcast(cb), Seq("m"))
-      .withColumn("d2",
-        dot(col("qsv"), col("qsv")) - lit(2.0) * dot(col("qsv"), col("kv"))
-          + dot(col("kv"), col("kv")))
-      .select(col("query_id"), col("m"), col("kid"),
-        floor(pround(col("d2"), 6) * lit(MeanScale) + lit(0.5)).as("pd2i"))
+    adcSearch(e, probes, probeLists(probes, cents, PqNProbe, "query_id", "cid"),
+      slices, cb, codes, coarse, "query_id", "m", "kid")
+  }
 
+  /** ADC search inside the probed lists, then the exact-cosine rerank
+    * of each probe's shortlist — the shared tail of both IVF-PQ forms.
+    * The distance table is `slices` (its `keys` but kid, plus qsv)
+    * against the codebooks `cb`, integerized per entry; a candidate's
+    * distance is the integer sum over its codes, and each probe keeps
+    * its [[PqShortlist]] smallest by (ad2, neighbor_id). `keys` is
+    * (query_id, m, kid); the residual form's table is per list, so
+    * its key adds cid.
+    */
+  private def adcSearch(e: DataFrame, probes: DataFrame, lists: DataFrame,
+      slices: DataFrame, cb: DataFrame, codes: DataFrame, coarse: DataFrame,
+      keys: String*): DataFrame = {
+    val dtab = slices.join(broadcast(cb), Seq("m"))
+      .withColumn("d2", sliceD2("qsv"))
+      .select(keys.map(col) :+
+        floor(pround(col("d2"), 6) * lit(MeanScale) + lit(0.5)).as("pd2i"): _*)
     // candidates = codes of vectors in probed lists; ADC = integer sum
     val ws = Window.partitionBy(col("query_id"))
       .orderBy(col("ad2"), col("neighbor_id"))
     val shortlist = codes
       .join(coarse, "vec_id")
-      .join(broadcast(probeLists), Seq("cid"))
+      .join(broadcast(lists), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(dtab), Seq("query_id", "m", "kid"))
+      .join(broadcast(dtab), keys)
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
       .agg(sum(col("pd2i")).as("ad2"))
       .withColumn("srnk", row_number().over(ws))
       .filter(col("srnk") <= PqShortlist)
       .select(col("query_id"), col("neighbor_id"), col("ad2"))
-
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(pround(col("cos"), 6).desc, col("neighbor_id"))
-    shortlist
-      .join(e.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")),
-        "neighbor_id")
-      .join(broadcast(probes), "query_id")
-      .withColumn("cos", dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= LshTopK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        pround(col("cos"), 4).as("cos_sim"),
-        pround(col("ad2") / lit(MeanScale), 4).as("approx_d2"))
-      .orderBy(col("query_id"), col("rank"))
+    rerank(shortlist
+        .join(e.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")),
+          "neighbor_id")
+        .join(broadcast(probes), "query_id"),
+      LshTopK, col("query_id"), col("rank"), col("neighbor_id"), cosSim,
+      pround(col("ad2") / lit(MeanScale), 4).as("approx_d2"))
   }
 
   /** IVF-PQ over RESIDUALS (IVFADC proper, Jégou et al. 2011 §III):
@@ -1003,8 +1014,7 @@ object Similarity {
     // assignment is parquet, exactly like this seal but durable.
     val coarse = graft.plans.LazySeal.seal(
       ivfAssignmentOf(e).select(col("vec_id"), col("cid")))
-    val cents = sampledVecs(e)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
+    val cents = centroidsOf(e)
     val centsN = cents.select(col("cid"),
       transform(col("cv"), x => x / col("cnrm")).as("cvn"))
 
@@ -1027,88 +1037,35 @@ object Similarity {
       codes: DataFrame, coarse: DataFrame, cents: DataFrame): DataFrame = {
     val centsN = cents.select(col("cid"),
       transform(col("cv"), x => x / col("cnrm")).as("cvn"))
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(pround(col("pcos"), 6).desc, col("cid"))
-    val probesRaw = e.filter(col("vec_id") < ProbeCount)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val probeLists = broadcast(probesRaw).crossJoin(broadcast(cents))
-      .withColumn("pcos", dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
-      .withColumn("prnk", row_number().over(wp))
-      .filter(col("prnk") <= PqNProbe)
-      .select(col("query_id"), col("cid"))
+    val probes = probesOf(e)
+    val lists = probeLists(probes, cents, PqNProbe, "query_id", "cid")
 
-    // per-(probe, list) residual ADC table: the query's residual
+    // per-(probe, list) residual ADC slices: the query's residual
     // against THAT list's centroid, sliced per subspace
-    val rq = broadcast(probeLists).join(broadcast(centsN), "cid")
-      .join(broadcast(probesRaw), "query_id")
+    val rq = broadcast(lists).join(broadcast(centsN), "cid")
+      .join(broadcast(probes), "query_id")
       .select(col("query_id"), col("cid"),
         zip_with(transform(col("qv"), x => x / col("qnrm")), col("cvn"),
           (a, b) => a - b).as("rv"))
-    val dtab = (0 until PqM).map { m =>
+    val slices = (0 until PqM).map { m =>
         rq.select(col("query_id"), col("cid"), lit(m).as("m"),
           slice(col("rv"), m * PqSubDims + 1, PqSubDims).as("qsv"))
       }.reduce(_ unionByName _)
-      .join(broadcast(cb), Seq("m"))
-      .withColumn("d2",
-        dot(col("qsv"), col("qsv")) - lit(2.0) * dot(col("qsv"), col("kv"))
-          + dot(col("kv"), col("kv")))
-      .select(col("query_id"), col("cid"), col("m"), col("kid"),
-        floor(pround(col("d2"), 6) * lit(MeanScale) + lit(0.5)).as("pd2i"))
-
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(col("ad2"), col("neighbor_id"))
-    val shortlist = codes
-      .join(coarse, "vec_id")
-      .join(broadcast(probeLists), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(dtab), Seq("query_id", "cid", "m", "kid"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum(col("pd2i")).as("ad2"))
-      .withColumn("srnk", row_number().over(ws))
-      .filter(col("srnk") <= PqShortlist)
-      .select(col("query_id"), col("neighbor_id"), col("ad2"))
-
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(pround(col("cos"), 6).desc, col("neighbor_id"))
-    shortlist
-      .join(e.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")),
-        "neighbor_id")
-      .join(broadcast(probesRaw), "query_id")
-      .withColumn("cos", dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= LshTopK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        pround(col("cos"), 4).as("cos_sim"),
-        pround(col("ad2") / lit(MeanScale), 4).as("approx_d2"))
-      .orderBy(col("query_id"), col("rank"))
+    adcSearch(e, probes, lists, slices, cb, codes, coarse,
+      "query_id", "cid", "m", "kid")
   }
 
   private def ivfSearch(s: SparkSession, d: String,
                         cents: DataFrame, assign: DataFrame): DataFrame = {
     val e = vectors(s, d)
-    val probes = e.filter(col("vec_id") < ProbeCount)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(pround(col("pcos"), 6).desc, col("cid"))
-    val probeLists = broadcast(probes).crossJoin(broadcast(cents))
-      .withColumn("pcos", dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
-      .withColumn("prnk", row_number().over(wp))
-      .filter(col("prnk") <= NProbe)
-      .select(col("query_id"), col("qv"), col("qnrm"), col("cid"))
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(pround(col("cos"), 6).desc, col("neighbor_id"))
+    val lists = probeLists(probesOf(e), cents, NProbe, "query_id", "qv", "qnrm", "cid")
     // assign arrives narrow (vec_id, cid, ccos); vectors re-join here
     val assignFull = assign.select(col("vec_id"), col("cid"))
       .join(e.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
-    probeLists.join(assignFull.select(col("vec_id").as("neighbor_id"),
-                                      col("v"), col("nrm"), col("cid")), Seq("cid"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= LshTopK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-              pround(col("cos"), 4).as("cos_sim"))
-      .orderBy(col("query_id"), col("rank"))
+    rerank(lists.join(assignFull.select(col("vec_id").as("neighbor_id"),
+                                        col("v"), col("nrm"), col("cid")), Seq("cid"))
+        .filter(col("neighbor_id") =!= col("query_id")),
+      LshTopK, col("query_id"), col("rank"), col("neighbor_id"), cosSim)
   }
 
   private val TrainIters = 3
@@ -1637,10 +1594,23 @@ object Similarity {
   private val vecCte =
     "e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
 
+  // the sampled coarse centroids (centroidsOf)
+  private val centsCte =
+    s"""st AS (SELECT greatest($CentroidEvery, 1 << (length(bin(count(*))) // 2)) AS stride FROM e),
+       |cents AS (SELECT vec_id AS cid, v AS cv FROM e, st WHERE vec_id % stride = 0)""".stripMargin
+
+  // ... and the narrow coarse assignment the PQ searches join codes to
+  private val cassignCte =
+    s"""$centsCte,
+       |cassign AS (SELECT vec_id, cid FROM (
+       |    SELECT e.vec_id, c.cid,
+       |      row_number() OVER (PARTITION BY e.vec_id
+       |        ORDER BY pround(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) AS crnk
+       |    FROM e, cents c) t WHERE crnk = 1)""".stripMargin
+
   private val ivfCte =
     s"""$vecCte,
-       |st AS (SELECT greatest($CentroidEvery, 1 << (length(bin(count(*))) // 2)) AS stride FROM e),
-       |cents AS (SELECT vec_id AS cid, v AS cv FROM e, st WHERE vec_id % stride = 0),
+       |$centsCte,
        |assign AS (
        |  SELECT vec_id, v, cid, ccos FROM (
        |    SELECT e.vec_id, e.v, c.cid,
@@ -1702,26 +1672,10 @@ object Similarity {
        |    GROUP BY m, kid, dim) g GROUP BY m, kid)""".stripMargin
   }
 
-  // Residual-PQ (IVFADC) oracle preamble: coarse assignment first,
-  // then the SAME training/coding chain as pqCte, but over residual
-  // vectors en = v_unit − c_unit (so pqIterSql and the codes CTE
-  // apply unchanged — they only reference `en`-derived names).
-  private val pqResCte: String =
-    s"""$vecCte,
-       |st AS (SELECT greatest($CentroidEvery, 1 << (length(bin(count(*))) // 2)) AS stride FROM e),
-       |cents AS (SELECT vec_id AS cid, v AS cv FROM e, st WHERE vec_id % stride = 0),
-       |cassign AS (SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, c.cid,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY pround(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) AS crnk
-       |    FROM e, cents c) t WHERE crnk = 1),
-       |cnorm AS (SELECT cid, [x / sqrt(list_dot_product(cv, cv)) FOR x IN cv] AS cvn FROM cents),
-       |un AS (SELECT vec_id, [x / sqrt(list_dot_product(v, v)) FOR x IN v] AS v FROM e),
-       |en AS (SELECT u.vec_id,
-       |         list_transform(generate_series(1, $Dims), i -> u.v[i] - cn.cvn[i]) AS v
-       |       FROM un u JOIN cassign ca ON ca.vec_id = u.vec_id
-       |       JOIN cnorm cn ON cn.cid = ca.cid),
-       |mm AS (SELECT unnest(generate_series(0, ${PqM - 1})) AS m),
+  // The PQ training and coding chain over `en`, shared by both PQ
+  // preambles below.
+  private val pqCodesCte: String =
+    s"""mm AS (SELECT unnest(generate_series(0, ${PqM - 1})) AS m),
        |sub AS (SELECT vec_id, m,
        |          list_slice(v, m * $PqSubDims + 1, (m + 1) * $PqSubDims) AS sv
        |        FROM en, mm),
@@ -1737,25 +1691,111 @@ object Similarity {
        |        ORDER BY $pqD2, c.kid) AS rnk
        |    FROM sub s JOIN cb$PqIters c ON c.m = s.m) t WHERE rnk = 1)""".stripMargin
 
+  // Residual-PQ (IVFADC) oracle preamble: coarse assignment first,
+  // then the SAME training/coding chain as pqCte, but over residual
+  // vectors en = v_unit − c_unit (so pqIterSql and the codes CTE
+  // apply unchanged — they only reference `en`-derived names).
+  private val pqResCte: String =
+    s"""$vecCte,
+       |$cassignCte,
+       |cnorm AS (SELECT cid, [x / sqrt(list_dot_product(cv, cv)) FOR x IN cv] AS cvn FROM cents),
+       |un AS (SELECT vec_id, [x / sqrt(list_dot_product(v, v)) FOR x IN v] AS v FROM e),
+       |en AS (SELECT u.vec_id,
+       |         list_transform(generate_series(1, $Dims), i -> u.v[i] - cn.cvn[i]) AS v
+       |       FROM un u JOIN cassign ca ON ca.vec_id = u.vec_id
+       |       JOIN cnorm cn ON cn.cid = ca.cid),
+       |$pqCodesCte""".stripMargin
+
   private val pqCte: String =
     s"""$vecCte,
        |en AS (SELECT vec_id,
        |         [x / sqrt(list_dot_product(v, v)) FOR x IN v] AS v FROM e),
-       |mm AS (SELECT unnest(generate_series(0, ${PqM - 1})) AS m),
-       |sub AS (SELECT vec_id, m,
-       |          list_slice(v, m * $PqSubDims + 1, (m + 1) * $PqSubDims) AS sv
-       |        FROM en, mm),
-       |ts AS (SELECT 1 << (length(bin(count(*) // $PqTrainTarget)) - 1) AS tstride FROM e),
-       |tsub AS (SELECT s.* FROM sub s, ts WHERE s.vec_id % tstride = 0),
-       |ps AS (SELECT greatest($PqCodewordEvery, 1 << length(bin(count(*) // $PqCodebookTarget))) AS stride FROM e),
-       |cb0 AS (SELECT m, vec_id AS kid, sv AS kv FROM sub, ps
-       |        WHERE vec_id % stride = 0),
-       |${(1 to PqIters).map(pqIterSql).mkString(",\n")},
-       |codes AS (SELECT vec_id, m, kid FROM (
-       |    SELECT s.vec_id, s.m, c.kid,
-       |      row_number() OVER (PARTITION BY s.vec_id, s.m
-       |        ORDER BY $pqD2, c.kid) AS rnk
-       |    FROM sub s JOIN cb$PqIters c ON c.m = s.m) t WHERE rnk = 1)""".stripMargin
+       |$pqCodesCte""".stripMargin
+
+  // --- ANN search oracle stages (the SQL twins of probesOf,
+  // probeLists, adcSearch and rerank) ---------------------------------
+  private val probesCte =
+    s"probes AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $ProbeCount)"
+
+  /** Each probe's `n` nearest coarse lists, carrying the probe columns
+    * `carry` between query_id and cid.
+    */
+  private def plistsCte(n: Int, carry: String*): String = {
+    val out = (("query_id" +: carry) :+ "cid").mkString(", ")
+    val in = (("p.query_id" +: carry.map("p." + _)) :+ "c.cid").mkString(", ")
+    s"""plists AS (SELECT $out FROM (
+       |    SELECT $in,
+       |      row_number() OVER (PARTITION BY p.query_id
+       |        ORDER BY pround(list_cosine_similarity(p.qv, c.cv), 6) DESC, c.cid) AS prnk
+       |    FROM probes p, cents c) t
+       |  WHERE prnk <= $n)""".stripMargin
+  }
+
+  // IVF search over `cents` and `assign`: probe lists, then the exact
+  // rerank of every vector in them (ivfSearch)
+  private val ivfSearchSql =
+    s"""$probesCte,
+       |${plistsCte(NProbe, "qv")}
+       |SELECT query_id, rank, neighbor_id, cos_sim FROM (
+       |  SELECT pl.query_id, a.vec_id AS neighbor_id,
+       |    pround(list_cosine_similarity(pl.qv, a.v), 4) AS cos_sim,
+       |    row_number() OVER (PARTITION BY pl.query_id
+       |      ORDER BY pround(list_cosine_similarity(pl.qv, a.v), 6) DESC, a.vec_id) AS rank
+       |  FROM plists pl
+       |  JOIN assign a ON a.cid = pl.cid AND a.vec_id <> pl.query_id) t
+       |WHERE rank <= $LshTopK
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** ADC sums over the probed lists' codes (the distance table joined
+    * on `dtabOn`), each probe's shortlist, then the exact rerank
+    * (adcSearch).
+    */
+  private def adcSearchSql(dtabOn: String): String =
+    s"""adc AS (SELECT pl.query_id, k.vec_id AS neighbor_id, sum(dt.pd2i) AS ad2
+       |  FROM plists pl
+       |  JOIN cassign a ON a.cid = pl.cid AND a.vec_id <> pl.query_id
+       |  JOIN codes k ON k.vec_id = a.vec_id
+       |  JOIN dtab dt ON $dtabOn
+       |  GROUP BY pl.query_id, k.vec_id),
+       |short AS (SELECT query_id, neighbor_id, ad2 FROM (
+       |    SELECT query_id, neighbor_id, ad2,
+       |      row_number() OVER (PARTITION BY query_id
+       |        ORDER BY ad2, neighbor_id) AS srnk
+       |    FROM adc) t WHERE srnk <= $PqShortlist)
+       |SELECT query_id, rank, neighbor_id, cos_sim, approx_d2 FROM (
+       |  SELECT s.query_id, n.vec_id AS neighbor_id,
+       |    pround(list_cosine_similarity(p.qv, n.v), 4) AS cos_sim,
+       |    pround(s.ad2 / $MeanScale, 4) AS approx_d2,
+       |    row_number() OVER (PARTITION BY s.query_id
+       |      ORDER BY pround(list_cosine_similarity(p.qv, n.v), 6) DESC, n.vec_id) AS rank
+       |  FROM short s
+       |  JOIN e n ON n.vec_id = s.neighbor_id
+       |  JOIN probes p ON p.query_id = s.query_id) t
+       |WHERE rank <= $LshTopK
+       |ORDER BY query_id, rank""".stripMargin
+
+  // the probes and their exact top-LshTopK (recallVsBrute's truth)
+  private val bruteTruthCte =
+    s"""$probesCte,
+       |bt AS (SELECT query_id, neighbor_id FROM (
+       |    SELECT p.query_id, c.vec_id AS neighbor_id,
+       |      row_number() OVER (PARTITION BY p.query_id
+       |        ORDER BY pround(list_cosine_similarity(p.qv, c.v), 6) DESC, c.vec_id) AS rank
+       |    FROM probes p JOIN e c ON c.vec_id <> p.query_id) t
+       |  WHERE rank <= $LshTopK)""".stripMargin
+
+  /** recallVsBrute's report: `bt` left-joined to the approximate top-k
+    * CTE `approx`, aliased `a`.
+    */
+  private def recallSql(approx: String, a: String): String =
+    s"""SELECT b.query_id AS query_id, count(*) AS n_true,
+       |  CAST(sum(CASE WHEN $a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
+       |  CAST(sum(CASE WHEN $a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+       |    * 1000 // count(*) AS recall_x1000
+       |FROM bt b LEFT JOIN $approx $a
+       |  ON $a.query_id = b.query_id AND $a.neighbor_id = b.neighbor_id
+       |GROUP BY b.query_id
+       |ORDER BY query_id""".stripMargin
 
   private val oraclesBase: Map[String, String] = Map(
     "smp_decontam_sem" ->
@@ -1842,38 +1882,12 @@ object Similarity {
          |      row_number() OVER (PARTITION BY e.vec_id
          |        ORDER BY pround(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) AS crnk
          |    FROM e, cents c) t WHERE crnk = 1),
-         |probes AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $ProbeCount),
-         |plists AS (SELECT query_id, qv, cid FROM (
-         |    SELECT p.query_id, p.qv, c.cid,
-         |      row_number() OVER (PARTITION BY p.query_id
-         |        ORDER BY pround(list_cosine_similarity(p.qv, c.cv), 6) DESC, c.cid) AS prnk
-         |    FROM probes p, cents c) t
-         |  WHERE prnk <= $NProbe)
-         |SELECT query_id, rank, neighbor_id, cos_sim FROM (
-         |  SELECT pl.query_id, a.vec_id AS neighbor_id,
-         |    pround(list_cosine_similarity(pl.qv, a.v), 4) AS cos_sim,
-         |    row_number() OVER (PARTITION BY pl.query_id
-         |      ORDER BY pround(list_cosine_similarity(pl.qv, a.v), 6) DESC, a.vec_id) AS rank
-         |  FROM plists pl
-         |  JOIN assign a ON a.cid = pl.cid AND a.vec_id <> pl.query_id) t
-         |WHERE rank <= $LshTopK
-         |ORDER BY query_id, rank""".stripMargin,
+         |$ivfSearchSql""".stripMargin,
     "ann_ivf_pq" ->
       s"""WITH $pqCte,
-         |st AS (SELECT greatest($CentroidEvery, 1 << (length(bin(count(*))) // 2)) AS stride FROM e),
-       |cents AS (SELECT vec_id AS cid, v AS cv FROM e, st WHERE vec_id % stride = 0),
-         |cassign AS (SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, c.cid,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY pround(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) AS crnk
-         |    FROM e, cents c) t WHERE crnk = 1),
-         |probes AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $ProbeCount),
-         |plists AS (SELECT query_id, cid FROM (
-         |    SELECT p.query_id, c.cid,
-         |      row_number() OVER (PARTITION BY p.query_id
-         |        ORDER BY pround(list_cosine_similarity(p.qv, c.cv), 6) DESC, c.cid) AS prnk
-         |    FROM probes p, cents c) t
-         |  WHERE prnk <= $PqNProbe),
+         |$cassignCte,
+         |$probesCte,
+         |${plistsCte(PqNProbe)},
          |dtab AS (SELECT s.query_id, s.m, c.kid,
          |    CAST(floor($pqD2 * $MeanScale + 0.5) AS BIGINT) AS pd2i
          |  FROM (SELECT p.query_id, mm.m,
@@ -1881,37 +1895,11 @@ object Similarity {
          |                     mm.m * $PqSubDims + 1, (mm.m + 1) * $PqSubDims) AS sv
          |        FROM probes p, mm) s
          |  JOIN cb$PqIters c ON c.m = s.m),
-         |adc AS (SELECT pl.query_id, k.vec_id AS neighbor_id, sum(dt.pd2i) AS ad2
-         |  FROM plists pl
-         |  JOIN cassign a ON a.cid = pl.cid AND a.vec_id <> pl.query_id
-         |  JOIN codes k ON k.vec_id = a.vec_id
-         |  JOIN dtab dt ON dt.query_id = pl.query_id AND dt.m = k.m AND dt.kid = k.kid
-         |  GROUP BY pl.query_id, k.vec_id),
-         |short AS (SELECT query_id, neighbor_id, ad2 FROM (
-         |    SELECT query_id, neighbor_id, ad2,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY ad2, neighbor_id) AS srnk
-         |    FROM adc) t WHERE srnk <= $PqShortlist)
-         |SELECT query_id, rank, neighbor_id, cos_sim, approx_d2 FROM (
-         |  SELECT s.query_id, n.vec_id AS neighbor_id,
-         |    pround(list_cosine_similarity(p.qv, n.v), 4) AS cos_sim,
-         |    pround(s.ad2 / $MeanScale, 4) AS approx_d2,
-         |    row_number() OVER (PARTITION BY s.query_id
-         |      ORDER BY pround(list_cosine_similarity(p.qv, n.v), 6) DESC, n.vec_id) AS rank
-         |  FROM short s
-         |  JOIN e n ON n.vec_id = s.neighbor_id
-         |  JOIN probes p ON p.query_id = s.query_id) t
-         |WHERE rank <= $LshTopK
-         |ORDER BY query_id, rank""".stripMargin,
+         |${adcSearchSql("dt.query_id = pl.query_id AND dt.m = k.m AND dt.kid = k.kid")}""".stripMargin,
     "ann_ivf_pq_res" ->
       s"""WITH $pqResCte,
-         |probes AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $ProbeCount),
-         |plists AS (SELECT query_id, cid FROM (
-         |    SELECT p.query_id, c.cid,
-         |      row_number() OVER (PARTITION BY p.query_id
-         |        ORDER BY pround(list_cosine_similarity(p.qv, c.cv), 6) DESC, c.cid) AS prnk
-         |    FROM probes p, cents c) t
-         |  WHERE prnk <= $PqNProbe),
+         |$probesCte,
+         |${plistsCte(PqNProbe)},
          |rq AS (SELECT pl.query_id, pl.cid,
          |         list_transform(generate_series(1, $Dims),
          |           i -> p.qv[i] / sqrt(list_dot_product(p.qv, p.qv)) - cn.cvn[i]) AS rv
@@ -1924,29 +1912,8 @@ object Similarity {
          |          list_slice(rv, mm.m * $PqSubDims + 1, (mm.m + 1) * $PqSubDims) AS sv
          |        FROM rq, mm) s
          |  JOIN cb$PqIters c ON c.m = s.m),
-         |adc AS (SELECT pl.query_id, k.vec_id AS neighbor_id, sum(dt.pd2i) AS ad2
-         |  FROM plists pl
-         |  JOIN cassign a ON a.cid = pl.cid AND a.vec_id <> pl.query_id
-         |  JOIN codes k ON k.vec_id = a.vec_id
-         |  JOIN dtab dt ON dt.query_id = pl.query_id AND dt.cid = pl.cid
-         |              AND dt.m = k.m AND dt.kid = k.kid
-         |  GROUP BY pl.query_id, k.vec_id),
-         |short AS (SELECT query_id, neighbor_id, ad2 FROM (
-         |    SELECT query_id, neighbor_id, ad2,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY ad2, neighbor_id) AS srnk
-         |    FROM adc) t WHERE srnk <= $PqShortlist)
-         |SELECT query_id, rank, neighbor_id, cos_sim, approx_d2 FROM (
-         |  SELECT s.query_id, n.vec_id AS neighbor_id,
-         |    pround(list_cosine_similarity(p.qv, n.v), 4) AS cos_sim,
-         |    pround(s.ad2 / $MeanScale, 4) AS approx_d2,
-         |    row_number() OVER (PARTITION BY s.query_id
-         |      ORDER BY pround(list_cosine_similarity(p.qv, n.v), 6) DESC, n.vec_id) AS rank
-         |  FROM short s
-         |  JOIN e n ON n.vec_id = s.neighbor_id
-         |  JOIN probes p ON p.query_id = s.query_id) t
-         |WHERE rank <= $LshTopK
-         |ORDER BY query_id, rank""".stripMargin,
+         |${adcSearchSql("dt.query_id = pl.query_id AND dt.cid = pl.cid\n" +
+                          "              AND dt.m = k.m AND dt.kid = k.kid")}""".stripMargin,
     "ann_brute" ->
       s"""WITH $vecCte
          |SELECT query_id, rank, neighbor_id, cos_sim, label
@@ -2039,22 +2006,7 @@ object Similarity {
          |ORDER BY drop_id""".stripMargin,
     "ann_ivf" ->
       s"""WITH $ivfCte,
-         |probes AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $ProbeCount),
-         |plists AS (SELECT query_id, qv, cid FROM (
-         |    SELECT p.query_id, p.qv, c.cid,
-         |      row_number() OVER (PARTITION BY p.query_id
-         |        ORDER BY pround(list_cosine_similarity(p.qv, c.cv), 6) DESC, c.cid) AS prnk
-         |    FROM probes p, cents c) t
-         |  WHERE prnk <= $NProbe)
-         |SELECT query_id, rank, neighbor_id, cos_sim FROM (
-         |  SELECT pl.query_id, a.vec_id AS neighbor_id,
-         |    pround(list_cosine_similarity(pl.qv, a.v), 4) AS cos_sim,
-         |    row_number() OVER (PARTITION BY pl.query_id
-         |      ORDER BY pround(list_cosine_similarity(pl.qv, a.v), 6) DESC, a.vec_id) AS rank
-         |  FROM plists pl
-         |  JOIN assign a ON a.cid = pl.cid AND a.vec_id <> pl.query_id) t
-         |WHERE rank <= $LshTopK
-         |ORDER BY query_id, rank""".stripMargin,
+         |$ivfSearchSql""".stripMargin,
     "emb_dim_stats" ->
       s"""WITH $vecCte,
          |x AS (SELECT unnest(v) AS x,
@@ -2077,19 +2029,8 @@ object Similarity {
          |FROM agg ORDER BY dim""".stripMargin,
     "ann_ivf_recall" ->
       s"""WITH $ivfCte,
-         |probes AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $ProbeCount),
-         |bt AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT p.query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY p.query_id
-         |        ORDER BY pround(list_cosine_similarity(p.qv, c.v), 6) DESC, c.vec_id) AS rank
-         |    FROM probes p JOIN e c ON c.vec_id <> p.query_id) t
-         |  WHERE rank <= $LshTopK),
-         |plists AS (SELECT query_id, qv, cid FROM (
-         |    SELECT p.query_id, p.qv, c.cid,
-         |      row_number() OVER (PARTITION BY p.query_id
-         |        ORDER BY pround(list_cosine_similarity(p.qv, c.cv), 6) DESC, c.cid) AS prnk
-         |    FROM probes p, cents c) t
-         |  WHERE prnk <= $NProbe),
+         |$bruteTruthCte,
+         |${plistsCte(NProbe, "qv")},
          |iv AS (SELECT query_id, neighbor_id FROM (
          |    SELECT pl.query_id, a.vec_id AS neighbor_id,
          |      row_number() OVER (PARTITION BY pl.query_id
@@ -2097,24 +2038,11 @@ object Similarity {
          |    FROM plists pl
          |    JOIN assign a ON a.cid = pl.cid AND a.vec_id <> pl.query_id) t
          |  WHERE rank <= $LshTopK)
-         |SELECT b.query_id AS query_id, count(*) AS n_true,
-         |  CAST(sum(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-         |  CAST(sum(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    * 1000 // count(*) AS recall_x1000
-         |FROM bt b LEFT JOIN iv i
-         |  ON i.query_id = b.query_id AND i.neighbor_id = b.neighbor_id
-         |GROUP BY b.query_id
-         |ORDER BY query_id""".stripMargin,
+         |${recallSql("iv", "i")}""".stripMargin,
     "ann_lsh_recall" ->
       s"""WITH $vecCte,
          |bk AS (SELECT vec_id, v, $bucketSql AS bucket FROM e),
-         |probes AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $ProbeCount),
-         |bt AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT p.query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY p.query_id
-         |        ORDER BY pround(list_cosine_similarity(p.qv, c.v), 6) DESC, c.vec_id) AS rank
-         |    FROM probes p JOIN e c ON c.vec_id <> p.query_id) t
-         |  WHERE rank <= $LshTopK),
+         |$bruteTruthCte,
          |lv AS (SELECT query_id, neighbor_id FROM (
          |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          |      row_number() OVER (PARTITION BY q.vec_id
@@ -2122,14 +2050,7 @@ object Similarity {
          |    FROM bk q JOIN bk c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
          |    WHERE q.vec_id < $ProbeCount) t
          |  WHERE rank <= $LshTopK)
-         |SELECT b.query_id AS query_id, count(*) AS n_true,
-         |  CAST(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-         |  CAST(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    * 1000 // count(*) AS recall_x1000
-         |FROM bt b LEFT JOIN lv l
-         |  ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         |GROUP BY b.query_id
-         |ORDER BY query_id""".stripMargin,
+         |${recallSql("lv", "l")}""".stripMargin,
     "sim_project" -> {
       val cols = projSignsSql.zipWithIndex.map { case (row, p) =>
         s"pround(list_dot_product(v, $row) / sqrt(64.0), 4) AS p$p"

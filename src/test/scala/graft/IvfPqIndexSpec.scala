@@ -49,12 +49,14 @@ class IvfPqIndexSpec extends AnyFunSuite {
     // second build into a fresh path (not the memoized one): the
     // build must be corpus-deterministic, not run-dependent
     val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_spec").toString
-    Similarity.buildIvfPqIndex(spark, sf, tmp)
-    val again = Similarity.annIvfPqSearch(spark, sf, tmp)
-      .collect().map(_.toSeq).toSeq
-    val memo = Similarity.queries("ann_ivf_pq_idx")(spark, sf)
-      .collect().map(_.toSeq).toSeq
-    assert(again == memo)
+      .createTempDirectory("graft_ivfpq_spec").toFile
+    try {
+      Similarity.buildIvfPqIndex(spark, sf, tmp.toString)
+      val again = Similarity.annIvfPqSearch(spark, sf, tmp.toString)
+        .collect().map(_.toSeq).toSeq
+      val memo = Similarity.queries("ann_ivf_pq_idx")(spark, sf)
+        .collect().map(_.toSeq).toSeq
+      assert(again == memo)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }
 }

@@ -21,6 +21,16 @@ class MapReduceJobSpec extends AnyFunSuite {
     assert(viaPipeline.except(viaJob).isEmpty)
   }
 
+  test("WordCountJob matches the TextAnalytics pipeline on the fixture corpus") {
+    import spark.implicits._
+    val docs = ReferenceData.fixtureDocs(spark)
+    val viaJob = WordCountJob.run(docs.as[(String, String)]).toDF("word", "count")
+    val viaPipeline = TextAnalytics.wordCount(docs)
+    assert(viaPipeline.count() > 0)
+    assert(viaJob.except(viaPipeline).isEmpty)
+    assert(viaPipeline.except(viaJob).isEmpty)
+  }
+
   test("a custom job (max line length per first letter) runs through the same engine") {
     import spark.implicits._
     object MaxLenJob extends MapReduceJob[String, Int, Int] {

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.Assertions.fail
 
 /** The reference implementation's input corpus and its word-count
@@ -20,4 +22,12 @@ object ReferenceData {
 
   /** The reference's final word-count output. */
   def golden: String = { need(s"$Dir/mr-out-final"); s"$Dir/mr-out-final" }
+
+  /** The generated fixture corpus every checkout has, for the
+    * properties that do not depend on the reference corpus: sf0.01
+    * `documents` as (doc_id as string, text) rows.
+    */
+  def fixtureDocs(spark: SparkSession): DataFrame =
+    graft.sources.Tables.documents(spark, "/root/testdata/sf0.01")
+      .select(col("doc_id").cast("string").as("doc_id"), col("text"))
 }

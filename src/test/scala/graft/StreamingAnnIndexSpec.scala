@@ -19,11 +19,19 @@ class StreamingAnnIndexSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
+  private val made = scala.collection.mutable.Buffer[java.io.File]()
+
   private def tmp(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_sann_$tag")
-    d.toFile.deleteOnExit()
+    val d = java.nio.file.Files.createTempDirectory(s"graft_sann_$tag").toFile
+    made += d
     d.toString
   }
+
+  // every directory a test made is removed recursively when it ends,
+  // pass or fail (deleteOnExit never removes a non-empty directory)
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally { made.foreach(org.apache.commons.io.FileUtils.deleteQuietly); made.clear() }
 
   private def rawOf(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("embedding"))

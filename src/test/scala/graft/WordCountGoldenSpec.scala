@@ -48,4 +48,12 @@ class WordCountGoldenSpec extends AnyFunSuite {
     val repart = TextAnalytics.wordCount(docs.repartition(13))
     assert(base.except(repart).isEmpty && repart.except(base).isEmpty)
   }
+
+  test("count is invariant under partitioning on the fixture corpus") {
+    val docs = ReferenceData.fixtureDocs(spark)
+    val base = TextAnalytics.wordCount(docs)
+    val repart = TextAnalytics.wordCount(docs.repartition(13))
+    assert(base.count() > 0)
+    assert(base.except(repart).isEmpty && repart.except(base).isEmpty)
+  }
 }
