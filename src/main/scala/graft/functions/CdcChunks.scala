@@ -30,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the emitted chunk rows ever leave the scan), and emits a row per
   * chunk.
   *
-  * Boundary semantics (pinned by CdcChunkSpec's plain-Scala
+  * Cut-point semantics (pinned by CdcChunkSpec's plain-Scala
   * differential and the prefix-insertion resync test): a position
   * p0 ≥ gram−1 whose `gram`-gram `tk[p0-gram+1] ⌴ … ⌴ tk[p0]`
   * portable-hash masks to 0 (mod `mask`) is the LAST token of its chunk — the

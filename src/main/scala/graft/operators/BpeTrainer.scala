@@ -159,8 +159,8 @@ object BpeTrainer {
             stopAt = Some(n)
           else { prefix += ((a, b, n)); used += a; used += b; used += (a + b) }
         }
-        val unseenBound = if (top.length > batchK) Some(top(batchK)._3) else None
-        val cut = (stopAt.toSeq ++ unseenBound.toSeq).maxOption
+        val unseenMax = if (top.length > batchK) Some(top(batchK)._3) else None
+        val cut = (stopAt.toSeq ++ unseenMax.toSeq).maxOption
         val safe = cut match {
           case Some(c) => prefix.result().takeWhile(_._3 > c)
           case None => prefix.result()

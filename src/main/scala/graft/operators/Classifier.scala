@@ -18,7 +18,7 @@ import graft.functions.CrossEngine.{portableHash, portableHashSql, tokens}
   * gate stays a single lazy plan).
   *
   * Seed labels are metadata-selected, the DSIR precedent: positives
-  * are the curated source tier (source number < [[HqSourceBound]] —
+  * are the curated source tier (source number < [[HqSourceCeiling]] —
   * the same tier [[Sampling]]'s mixture weights promote), negatives
   * everything else. On the synthetic corpus source is content-
   * uncorrelated, so gate scores sit near the prior (structurally
@@ -50,7 +50,7 @@ object Classifier {
   /** Sources numbered below this are the curated "high-quality" seed
     * tier (matches the top tier of [[Sampling]]'s mixture weights).
     */
-  private val HqSourceBound = 4
+  private val HqSourceCeiling = 4
 
   /** Documents kept by [[classifierDocs]] — a selection BUDGET (top-k
     * by score) rather than a fixed threshold: thresholding at 0 keeps
@@ -60,7 +60,7 @@ object Classifier {
   private val SelectBudget = 100
 
   private def isHq(source: org.apache.spark.sql.Column) =
-    substring(source, 4, 10).cast("int") < HqSourceBound
+    substring(source, 4, 10).cast("int") < HqSourceCeiling
 
   /** The trained model: one row per populated bucket —
     * (b, wi, kc, pc) with the two corpus constants REPEATED on every
@@ -319,7 +319,7 @@ object Classifier {
   )
 
   private val hqSql =
-    s"CAST(substr(source, 4) AS INT) < $HqSourceBound"
+    s"CAST(substr(source, 4) AS INT) < $HqSourceCeiling"
 
   /** The train+score CTE chain, mirroring [[modelOf]]/[[scoreWith]]
     * stage by stage (the DsirCteSql pattern; every sum that reaches

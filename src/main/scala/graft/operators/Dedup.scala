@@ -1306,11 +1306,8 @@ object Dedup {
     * "keep the most complete copy", the standard near-dup keep rule),
     * ties to the lowest doc_id. [[dropList]] keeps the lowest id of
     * each PAIR; this is the component-level policy a pipeline
-    * actually applies after transitive closure.
-    *
-    * The argmax is a packed [[Argmin]]: sound only for n_chars < 2²⁰
-    * and doc_id < 2⁴², and it fails LOUDLY outside that envelope
-    * instead of silently corrupting the winner.
+    * actually applies after transitive closure. The argmax is an
+    * [[Argmin]].
     */
   def keepBest(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -1324,7 +1321,6 @@ object Dedup {
   private[graft] def keepBestOf(comp: DataFrame, docs: DataFrame): DataFrame =
     Argmin(comp.join(docs.select(col("doc_id"), col("n_chars")), Seq("doc_id")),
         Seq("component_id"), "n_chars", "doc_id", "keepBest", desc = true,
-        bound = Some(Argmin.Bound(0L, (1L << 20) - 1, (1L << 42) - 1)),
         carry = Seq("n_chars"), extra = Seq(count(lit(1)).as("n_members")))
       .select(col("component_id"), col("n_members"), col("doc_id").as("kept_id"),
         col("n_chars").cast("long").as("kept_chars"))
@@ -1583,7 +1579,7 @@ object Dedup {
     * 20×-cheaper form a pipeline actually queries between ingests
     * (the `ann_ivf_pq_idx` serving-twin discipline): the in-plan twin
     * re-derives minhash → bands → verify → 4 label rounds every run;
-    * this one reads the persisted labels and runs only the packed
+    * this one reads the persisted labels and runs only the
     * argmax against the documents table. Result — and oracle — are
     * identical to `dedup_keep_best`: the build is deterministic and a
     * BIGINT parquet round-trip is bit-exact.

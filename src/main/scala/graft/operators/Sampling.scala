@@ -419,40 +419,33 @@ object Sampling {
     * single-shuffle shuffled-write. The audit emits per-shard
     * counts/bytes (balance check: uniform hash → shards within a few
     * % of each other), the hash range covered, and the first doc in
-    * training order. first_doc ties on 32-bit hash collisions are
-    * broken by doc_id via a FIXED-WIDTH HEX string key
-    * `%016x(H) || %016x(doc_id)` — lexicographic order on zero-padded
-    * hex equals numeric order on (H, doc_id), both engines render it
-    * identically, and unlike an integer packing H·2³¹ + doc_id it
-    * imposes NO doc_id ceiling (the packed form capped ids at 2³¹ and
-    * its guard tripped on the 100× replicated rung, ids to ~10¹⁰ — a
-    * 100 TB corpus has more than 2³¹ documents).
+    * training order: the [[Argmin]] on (H, doc_id). The oracle breaks
+    * 32-bit hash collisions by doc_id via the FIXED-WIDTH HEX key
+    * `%016x(H) || %016x(doc_id)`; H lies in [0, 2³²), so for
+    * non-negative ids its lexicographic order is the numeric order on
+    * (H, doc_id), with no doc_id ceiling (a 100 TB corpus has more
+    * than 2³¹ documents).
     */
   def shuffleShards(s: SparkSession, d: String): DataFrame =
     shuffleShardsOf(Tables.documents(s, d))
 
   private[graft] def shuffleShardsOf(docs: DataFrame): DataFrame = {
     val h = portableHash(concat(lit("shuffle:"), col("doc_id").cast("string")))
-    // in-plan range guard (the keepBestOf/clusterPurityOf pattern):
     // %x of a NEGATIVE id renders differently across engines (Java
-    // two's-complement vs DuckDB signed rendering) — a silent gate
-    // divergence. Fail LOUDLY instead; non-negative ids are unbounded.
-    val packKey = when(col("doc_id") >= 0L,
-        concat(format_string("%016x", col("h")),
-               format_string("%016x", col("doc_id"))))
-      .otherwise(raise_error(concat(
+    // two's-complement vs DuckDB signed rendering), so the oracle's
+    // hex order would diverge silently: fail LOUDLY instead
+    val id = when(col("doc_id") < 0L, raise_error(concat(
         lit("shuffleShards: negative doc_id unsupported: "),
         col("doc_id").cast("string"))))
-    docs
-      .select(col("doc_id"), col("n_chars"), h.as("h"),
-              (h % Shards).as("shard"))
-      .groupBy(col("shard"))
-      .agg(count(lit(1)).as("n_docs"),
-           sum(col("n_chars")).as("sum_chars"),
-           min_by(col("doc_id"), packKey)
-             .as("first_doc"),
-           min(col("h")).as("min_h"),
-           max(col("h")).as("max_h"))
+      .otherwise(col("doc_id"))
+    Argmin(docs.select(id.as("doc_id"), col("n_chars"), h.as("h"),
+                       (h % Shards).as("shard")),
+        Seq("shard"), "h", "doc_id", "shuffleShards",
+        extra = Seq(count(lit(1)).as("n_docs"),
+          sum(col("n_chars")).as("sum_chars"),
+          min(col("h")).as("min_h"), max(col("h")).as("max_h")))
+      .select(col("shard"), col("n_docs"), col("sum_chars"),
+        col("doc_id").as("first_doc"), col("min_h"), col("max_h"))
       .orderBy(col("shard"))
   }
 

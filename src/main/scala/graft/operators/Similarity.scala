@@ -234,19 +234,11 @@ object Similarity {
   private def nearestMate(cand: DataFrame, tag: String): DataFrame =
     Argmin(cand.select(col("query_id"), col("neighbor_id"),
         (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos")),
-      Seq("query_id"), "cos", "neighbor_id", tag, desc = true,
-      bound = Some(cosBound(VecIdMax)), carry = Seq("cos"))
+      Seq("query_id"), "cos", "neighbor_id", tag, desc = true, carry = Seq("cos"))
       .select(col("query_id"), col("neighbor_id"),
               pround(col("cos"), 4).as("cos_sim"),
               (pround(col("cos"), 4) >= 0.95).as("is_dup"))
       .orderBy(col("query_id"))
-
-  /** Packed envelope of a cosine argmax: |cos| ≤ 1 up to float error. */
-  private def cosBound(idHi: Long): Argmin.Bound =
-    Argmin.Bound(-1000001L, 1000001L, idHi)
-
-  /** Vector-id ceiling (2⁴² − 1) of the packed cosine argmaxes. */
-  private val VecIdMax = (1L << 42) - 1
 
   /** Near-dup scan over the FULL corpus via LSH buckets — the scale
     * path for embedding near-dup detection. [[embedNearDup]]'s probe
@@ -417,9 +409,9 @@ object Similarity {
   /** Clustering-quality audit: per-IVF-cluster label purity against
     * the embeddings table's ground-truth `label` — the standard
     * external evaluation a clustering step ships with (purity =
-    * majority-label fraction). The majority label is a packed
-    * [[Argmin]] (highest count, smallest label; labels in [0, 999999],
-    * so a bad or null label fails the query). Cost on top of the
+    * majority-label fraction). The majority label is an [[Argmin]]
+    * (highest count, smallest label; a null label fails the query).
+    * Cost on top of the
     * shared assignment: one (cid,label) aggregate whose output is
     * clusters × labels.
     */
@@ -439,7 +431,6 @@ object Similarity {
       .groupBy(col("cid"), col("label"))
       .agg(count(lit(1)).as("n"))
     Argmin(counts, Seq("cid"), "n", "label", "clusterPurity", desc = true,
-        bound = Some(Argmin.Bound(0L, (1L << 43) - 1, 999999L)),
         carry = Seq("n"), extra = Seq(sum(col("n")).as("n_vecs")))
       .select(col("cid"), col("n_vecs"),
         col("label").cast("int").as("majority_label"),
@@ -483,8 +474,8 @@ object Similarity {
     * an EXPLICIT centroid table (cid, cv, cnrm) — narrow ranking,
     * like [[ivfAssignment]]; callers re-join vectors as needed.
     * Stateless per vector, so incremental batches compose exactly
-    * (IvfStateSpec pins slice == full-assignment restriction). A
-    * packed [[Argmin]] carrying the winner's unrounded ccos: it sorts
+    * (IvfStateSpec pins slice == full-assignment restriction). An
+    * [[Argmin]] carrying the winner's unrounded ccos: it sorts
     * none of the |corpus|×|cents| candidate rows and the exchange
     * moves one row per vector. A zero-norm vector or centroid gives a
     * NULL ccos (try_divide, so the guard names it instead of a bare
@@ -494,8 +485,7 @@ object Similarity {
     Argmin(e.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("cid"),
           try_divide(dot(col("v"), col("cv")), col("nrm") * col("cnrm")).as("ccos")),
-      Seq("vec_id"), "ccos", "cid", "assignAgainst", desc = true,
-      bound = Some(cosBound(KidMax)), carry = Seq("ccos"))
+      Seq("vec_id"), "ccos", "cid", "assignAgainst", desc = true, carry = Seq("ccos"))
 
   // --- Persistent index state ---------------------------------------
   // The BloomDedup-state design applied to the ANN family: the INDEX
@@ -541,7 +531,7 @@ object Similarity {
     * vector, the incremental encode of a frozen PQ index.
     */
   def pqEncodeWith(en: DataFrame, cb: DataFrame): DataFrame =
-    assignCodesBounded(subVectors(en), cb)
+    assignCodesNarrow(subVectors(en), cb)
 
   /** Persist the PQ-encoded corpus (vec_id, m, kid) as parquet. */
   def savePqCodes(codes: DataFrame, path: String): Unit =
@@ -763,34 +753,20 @@ object Similarity {
         }: _*)).as("p"))
       .select(col("vec_id"), col("p.m").as("m"), col("p.sv").as("sv"))
 
-  /** Codeword/centroid id ceiling (2³⁸ − 1) of the packed argmins. */
-  private val KidMax = (1L << 38) - 1
-
   /** Squared Euclidean distance between slice `sv` and the codeword kv. */
   private def sliceD2(sv: String): Column =
     dot(col(sv), col(sv)) - lit(2.0) * dot(col(sv), col("kv")) +
       dot(col("kv"), col("kv"))
 
   /** Nearest codeword per (vector, subspace), NARROW: (vec_id, m,
-    * kid) — the argmin of squared Euclidean distance with kid
-    * tiebreak, for ARBITRARY input vectors: the unbounded [[Argmin]].
-    * Its sole caller is TRAINING ([[assignCodes]]), whose input is
-    * the [[pqTrainStride]]-bounded sample and whose vectors are
-    * whatever the caller supplies (PqTrainSampleSpec trains on an
-    * unnormalized corpus with per-slice d2 in the thousands).
-    * Corpus-scale encodes go through [[assignCodesBounded]].
+    * kid) — the [[Argmin]] of squared Euclidean distance with kid
+    * tiebreak, for ARBITRARY input vectors. It serves both TRAINING
+    * ([[assignCodes]], over the [[pqTrainStride]]-bounded sample,
+    * whose vectors may be unnormalized: PqTrainSampleSpec trains
+    * with per-slice d2 in the thousands) and the corpus-scale encode.
     */
   private[graft] def assignCodesNarrow(sub: DataFrame, cb: DataFrame): DataFrame =
     Argmin(codeD2(sub, cb), Seq("vec_id", "m"), "d2", "kid", "assignCodesNarrow")
-
-  /** [[assignCodesNarrow]] for the CORPUS-SCALE encode: the packed
-    * [[Argmin]], whose range contract kid < 2³⁸ and d2 ≤ 16 every
-    * encode caller satisfies BY CONSTRUCTION — unit-normalized slices
-    * give ‖sv−kv‖² ≤ 4, residual slices ≤ 16.
-    */
-  private[graft] def assignCodesBounded(sub: DataFrame, cb: DataFrame): DataFrame =
-    Argmin(codeD2(sub, cb), Seq("vec_id", "m"), "d2", "kid", "assignCodesBounded",
-      bound = Some(Argmin.Bound(0L, 16000000L, KidMax)))
 
   /** (vec_id, m, kid, d2): every slice against its subspace's codewords. */
   private def codeD2(sub: DataFrame, cb: DataFrame): DataFrame =
@@ -896,7 +872,7 @@ object Similarity {
     val en = e.select(col("vec_id"),
       transform(col("v"), x => x / col("nrm")).as("v"))
     val cb = trainPqCodebooks(en)
-    val codes = assignCodesBounded(subVectors(en), cb)
+    val codes = assignCodesNarrow(subVectors(en), cb)
     val coarse = ivfAssignmentOf(e).select(col("vec_id"), col("cid"))
     ivfPqSearchFrom(e, cb, codes, coarse, centroidsOf(e))
   }
@@ -1023,7 +999,7 @@ object Similarity {
       .select(col("vec_id"),
         zip_with(col("v"), col("cvn"), (a, b) => a - b).as("v"))
     val cb = trainPqCodebooks(resid, countOn = Some(en))
-    val codes = assignCodesBounded(subVectors(resid), cb)
+    val codes = assignCodesNarrow(subVectors(resid), cb)
     ivfPqResSearchFrom(e, cb, codes, coarse, cents)
   }
 
@@ -1077,7 +1053,7 @@ object Similarity {
   private val MeanScale = 1048576.0
 
   /** Lloyd's k-means for IVF centroids, DataFrame-native: assignment
-    * is the unbounded [[Argmin]] over broadcast centroids (ranked on
+    * is the [[Argmin]] over broadcast centroids (ranked on
     * pround(d2, 6) with cid tiebreak — engine-stable), the update
     * step recomputes element-wise means via posexplode → (cid, dim) exact integerized mean →
     * array rebuild. Deterministic: init = the sampled centroids,
@@ -1100,9 +1076,9 @@ object Similarity {
     var cents = sampledVecs(e)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
     for (i <- 0 until iters) {
-      // the two-pass argmin reads the centroids twice, so unrolled
-      // rounds would double the static tree per round; sealed (a few
-      // KB), every trained round plans and runs once
+      // sealed (a few KB), each round's centroids are a leaf of the
+      // next round instead of its whole unrolled tree: every trained
+      // round plans and runs once
       val assigned = assignToCentroids(e,
         if (checkpoint || i == 0) cents else graft.plans.LazySeal.seal(cents))
       // one groupBy(cid) with the integerized vector-mean aggregate —
@@ -1127,8 +1103,7 @@ object Similarity {
     * interpreted — boxing per element — and measured ~6x slower on
     * the training crossJoin). The norms are computed once per row
     * per side, not per pair. Ranking on pround(d2, 6) + cid absorbs
-    * the ≤1-ulp difference vs the fold form. Unbounded: raw vectors
-    * carry no d2 ceiling.
+    * the ≤1-ulp difference vs the fold form.
     */
   private def assignToCentroids(e: DataFrame, cents: DataFrame): DataFrame = {
     val ev = e.withColumn("vv", dot(col("v"), col("v")))
@@ -1264,7 +1239,7 @@ object Similarity {
     *
     * 100 TB shape: eval sets are SMALL and FIXED (thousands of
     * vectors) — they broadcast, the corpus never shuffles, and the
-    * per-doc argmax is a packed [[Argmin]] (partial = one row per doc
+    * per-doc argmax is an [[Argmin]] (partial = one row per doc
     * per partition). Linear in the corpus at fixed eval size; an eval
     * set too large to broadcast would go through the LSH bucket join
     * ([[embedNearDupLsh]]'s path) instead. Ties (equal micro-cosine
@@ -1292,8 +1267,7 @@ object Similarity {
     * IVF and the adaptive union are bit-compatible on rounding.
     */
   private def nearestEvalReport(rows: DataFrame, tag: String): DataFrame =
-    Argmin(rows, Seq("doc_id"), "cos", "eval_id", tag, desc = true,
-      bound = Some(cosBound(VecIdMax)), carry = Seq("cos"))
+    Argmin(rows, Seq("doc_id"), "cos", "eval_id", tag, desc = true, carry = Seq("cos"))
       .select(col("doc_id"), col("eval_id"),
         floor(col("cos") * lit(1000000d) + lit(0.5)).cast("long").as("max_cos_x1e6"))
       .orderBy(col("doc_id"))
@@ -1338,7 +1312,7 @@ object Similarity {
     * pairs with zero-norm rows dropped (they can be near nothing);
     * vectors stay RAW (not pre-normalized) so the gate's per-eval
     * cosine arithmetic is bit-identical to [[semanticDecontam]]'s.
-    * Bounded by the real-world contract: eval sets are small and
+    * Sized by the real-world contract: eval sets are small and
     * fixed — this is sanctioned one-time driver work, like the
     * Bloom sketch and classifier-model builds.
     */

@@ -137,7 +137,7 @@ object TextPipeline {
     * term integerizes at 1e6 BEFORE the sum (the lm_score/q31
     * trick) so the per-source aggregate is an order-free BIGINT sum
     * — hash-exact across engines and partitionings; the top-drift
-    * bucket is a packed [[Argmin]] on |gap|, ties to the lowest b.
+    * bucket is an [[Argmin]] on |gap|, ties to the lowest b.
     */
   def driftReport(s: SparkSession, d: String): DataFrame =
     driftOf(Tables.documents(s, d))
@@ -165,8 +165,7 @@ object TextPipeline {
       .withColumn("gap_int",
         floor((col("p") - col("q")) * 1e6 + 0.5).cast("long"))
     Argmin(terms.withColumn("abs_gap", abs(col("gap_int"))), Seq("source"),
-        "abs_gap", "b", "driftOf", desc = true,
-        bound = Some(Argmin.Bound(0L, 1000000L, 9L)), carry = Seq("gap_int"),
+        "abs_gap", "b", "driftOf", desc = true, carry = Seq("gap_int"),
         extra = Seq(max(col("n_s")).as("n_docs"), sum(col("qi")).as("jsd_int")))
       .select(col("source"), col("n_docs"),
         pround(col("jsd_int").cast("double") / 1e6, 4).as("jsd_bits"),

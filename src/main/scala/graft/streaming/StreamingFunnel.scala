@@ -63,7 +63,7 @@ object StreamingFunnel {
   }
 
   /** @param ttlIdleMs evict a user's funnel state after this many ms
-    *   of processing-time idleness (<= 0 disables TTL). Bounds state
+    *   of processing-time idleness (<= 0 disables TTL). Caps state
     *   by the ACTIVE user population under churn: a funnel horizon of
     *   e.g. 7 days means a user silent that long restarts at depth 0,
     *   which is the standard analysis-window semantic. */

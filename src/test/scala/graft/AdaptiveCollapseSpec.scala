@@ -18,13 +18,13 @@ import graft.operators.Dedup
   * shingles with their own clones) must produce NOTHING on either
   * path — the uncollapsed derivation never pairs them.
   */
-class AdaptiveCollapseSpec extends AnyFunSuite {
+class AdaptiveCollapseSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_adapt").toString
+    val dir = tempDir("graft_adapt")
     rows.toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.ApproxTopK.approx_top_k
@@ -7,8 +8,9 @@ import graft.functions.CrossEngine.tokens
 
 /** Space-saving aggregate: the presence guarantee (every term with
   * true count > N/capacity is in the summary) on the real 26k-word
-  * reference corpus, overestimation (sketch count >= true count), and
-  * partitioning invariance of the guaranteed set.
+  * reference corpus and on the fixture corpus, overestimation (sketch
+  * count >= true count), and partitioning invariance of the
+  * guaranteed set.
   */
 class ApproxTopKSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -16,10 +18,12 @@ class ApproxTopKSpec extends AnyFunSuite {
   private def refWords = spark.read.text(ReferenceData.corpus)
     .select(explode(tokens(col("value"))).as("word"))
 
-  test("presence guarantee on the reference corpus (26k distinct words)") {
-    val words = refWords.cache()
+  private def fixtureWords = ReferenceData.fixtureDocs(spark)
+    .select(explode(tokens(col("text"))).as("word"))
+
+  private def presence(source: DataFrame, cap: Int): Unit = {
+    val words = source.cache()
     try {
-      val cap = 256
       val n = words.count()
       val sketch = words.agg(approx_top_k(col("word"), cap).as("hh"))
         .select(explode(col("hh")).as("h"))
@@ -37,10 +41,20 @@ class ApproxTopKSpec extends AnyFunSuite {
     } finally words.unpersist()
   }
 
-  test("guaranteed set is partitioning-invariant") {
-    val cap = 128
+  test("presence guarantee on the reference corpus (26k distinct words)") {
+    presence(refWords, cap = 256)
+  }
+
+  // the fixture corpus has ~80 distinct words, so its capacity stays
+  // below that: the sketch must evict for the guarantee to be tested
+  test("presence guarantee on the fixture corpus") {
+    presence(fixtureWords, cap = 32)
+  }
+
+  /** The guaranteed set at 2 and at 13 partitions. */
+  private def guaranteedAt(source: DataFrame, cap: Int): (Set[String], Set[String]) = {
     def guaranteed(parts: Int): Set[String] = {
-      val words = refWords.repartition(parts)
+      val words = source.repartition(parts)
       val n = words.count()
       val cands = words.agg(approx_top_k(col("word"), cap).as("hh"))
         .select(explode(col("hh")).as("h")).select(col("h.term").as("word"))
@@ -49,7 +63,17 @@ class ApproxTopKSpec extends AnyFunSuite {
         .filter(col("cnt") * cap > n)
         .collect().map(_.getString(0)).toSet
     }
-    assert(guaranteed(2) === guaranteed(13))
+    (guaranteed(2), guaranteed(13))
+  }
+
+  test("guaranteed set is partitioning-invariant") {
+    val (two, thirteen) = guaranteedAt(refWords, cap = 128)
+    assert(two === thirteen)
+  }
+
+  test("guaranteed set is partitioning-invariant on the fixture corpus") {
+    val (two, thirteen) = guaranteedAt(fixtureWords, cap = 32)
+    assert(two.nonEmpty && two === thirteen)
   }
 
   test("registered in SQL") {

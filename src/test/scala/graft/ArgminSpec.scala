@@ -7,16 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.CrossEngine.pround
 import graft.operators.{Argmin, Similarity}
 
-/** Property spec for the one argmin primitive: its packed and two-pass
-  * forms both equal the window reference
-  * `row_number() over (partition by k order by score, id) = 1` (score
-  * micro-rounded when double), carried columns and extra aggregates
-  * included; NULL, NaN and out-of-range inputs fail both forms.
+/** Property spec for the one argmin primitive: it equals the window
+  * reference `row_number() over (partition by k order by score, id) =
+  * 1` (score micro-rounded when double), carried columns and extra
+  * aggregates included, for any id and any integral rank; NULL, NaN,
+  * null ids and |score| above its micro range fail the query.
   */
 class ArgminSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-
-  private val Wide = Argmin.Bound(-5000001L, 5000001L, (1L << 20) - 1)
 
   /** Generated (k, id, score, c) groups; ids repeat within a key, and
     * rows tied on (k, id, ranked score) are kept once so the reference
@@ -43,35 +41,45 @@ class ArgminSpec extends AnyFunSuite {
       .collect().toSet
   }
 
-  private def argmin(rows: DataFrame, desc: Boolean,
-                     bound: Option[Argmin.Bound]): Set[Row] =
-    Argmin(rows, Seq("k"), "score", "id", "spec", desc = desc, bound = bound,
+  private def argmin(rows: DataFrame, desc: Boolean): Set[Row] =
+    Argmin(rows, Seq("k"), "score", "id", "spec", desc = desc,
       carry = Seq("c", "score"), extra = Seq(count(lit(1)).as("n")))
       .collect().toSet
 
-  private def agrees(rows: DataFrame, bound: Option[Argmin.Bound]): Unit =
+  private def agrees(rows: DataFrame): Unit =
     for (desc <- Seq(false, true)) {
       val ref = reference(rows, desc)
       assert(ref.size > 10)
-      assert(argmin(rows, desc, None) === ref, s"two-pass, desc=$desc")
-      bound.foreach(b => assert(argmin(rows, desc, Some(b)) === ref, s"packed, desc=$desc"))
+      assert(argmin(rows, desc) === ref, s"desc=$desc")
     }
 
-  test("both forms equal the window on micro-rounding ties, negatives and repeated ids") {
+  test("the argmin equals the window on micro-rounding ties, negatives and repeated ids") {
     // every score sits within ±4e-7 of j/1e6, so rows with equal j
     // tie after micro-rounding while their raw scores differ
-    agrees(groups(1L, 600)(r => (r.nextInt(7) - 3) * 1e-6 + (r.nextDouble() - 0.5) * 8e-7),
-      Some(Wide))
-    agrees(groups(2L, 600)(r => -r.nextDouble() * 4.0), Some(Wide))
+    agrees(groups(1L, 600)(r => (r.nextInt(7) - 3) * 1e-6 + (r.nextDouble() - 0.5) * 8e-7))
+    agrees(groups(2L, 600)(r => -r.nextDouble() * 4.0))
   }
 
-  test("both forms equal the window on integral scores") {
-    val rows = groups(3L, 600)(r => (r.nextInt(9) - 4).toDouble)
-      .withColumn("score", col("score").cast("long"))
-    agrees(rows, Some(Argmin.Bound(-4L, 4L, 11L)))
+  test("the argmin equals the window on integral scores") {
+    agrees(groups(3L, 600)(r => (r.nextInt(9) - 4).toDouble)
+      .withColumn("score", col("score").cast("long")))
   }
 
-  test("the two-pass form equals the window on unbounded d2 in the thousands") {
+  test("the argmin equals the window on negative ids and ids beyond 2^42") {
+    for (base <- Seq(-(1L << 50), 1L << 42, Long.MaxValue - 100L))
+      agrees(groups(4L, 600)(r => (r.nextInt(7) - 3) * 1e-6)
+        .withColumn("id", col("id") * 7L - 30L + lit(base)))
+  }
+
+  test("the argmin equals the window on integral ranks at Long.MaxValue and Long.MinValue") {
+    // ties at both extremes: a desc rank computed by negation would
+    // overflow at Long.MinValue and sort it first
+    val extremes = Seq(Long.MinValue, Long.MinValue + 1, -1L, 0L, Long.MaxValue - 1, Long.MaxValue)
+    agrees(groups(5L, 600)(r => r.nextInt(extremes.size).toDouble)
+      .withColumn("score", element_at(typedLit(extremes), col("score").cast("int") + 1)))
+  }
+
+  test("the argmin equals the window on d2 in the thousands") {
     // the PqTrainSampleSpec corpus, scaled and shifted so per-slice d2
     // against unperturbed codewords runs into the thousands
     val v = spark.range(256).select(col("id").as("vec_id"),
@@ -87,35 +95,39 @@ class ArgminSpec extends AnyFunSuite {
           .as("score"),
         col("vec_id").as("c"))
     assert(rows.agg(max(col("score"))).head().getDouble(0) > 1000d)
-    agrees(rows, bound = None)
-    assertRaises(rows, Some(Argmin.Bound(0L, 16000000L, 255L)), "outside packed range")
+    agrees(rows)
   }
 
-  private def assertRaises(rows: DataFrame, bound: Option[Argmin.Bound],
-                           what: String): Unit = {
-    val err = intercept[Exception](
-      Argmin(rows, Seq("k"), "score", "id", "spec", bound = bound).collect())
-    val messages = Iterator.iterate[Throwable](err)(_.getCause)
-      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
-    assert(messages.exists(m => m.contains("spec:") && m.contains(what)),
-      s"$bound: expected '$what', got: ${messages.head}")
-  }
+  private def assertRaises(rows: DataFrame, what: String): Unit =
+    for (desc <- Seq(false, true)) {
+      val err = intercept[Exception](
+        Argmin(rows, Seq("k"), "score", "id", "spec", desc = desc).collect())
+      val messages = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(messages.exists(m => m.contains("spec:") && m.contains(what)),
+        s"desc=$desc: expected '$what', got: ${messages.head}")
+    }
 
-  test("NULL, NaN and out-of-range inputs raise in both forms") {
+  test("NULL, NaN, null ids and |score| above the micro range raise") {
     val s = spark
     import s.implicits._
     def rows(bad: (Long, java.lang.Long, java.lang.Double)): DataFrame =
       Seq[(Long, java.lang.Long, java.lang.Double)]((1L, 1L, 0.5), (1L, 2L, 0.25), bad)
         .toDF("k", "id", "score")
-    for (b <- Seq(None, Some(Wide))) {
-      assertRaises(rows((1L, 3L, Double.NaN)), b, "NULL or NaN score")
-      assertRaises(rows((1L, 3L, null)), b, "NULL or NaN score")
-      assertRaises(rows((1L, null, 0.1)), b, "null id")
-    }
-    assertRaises(rows((1L, 3L, 5.0000015)), Some(Wide), "outside packed range")
-    assertRaises(rows((1L, 1L << 20, 0.1)), Some(Wide), "outside packed range")
-    assertRaises(rows((1L, -1L, 0.1)), Some(Wide), "outside packed range")
-    assertRaises(rows((1L, 3L, Double.PositiveInfinity)), None, "|score| above")
+    assertRaises(rows((1L, 3L, Double.NaN)), "NULL or NaN score")
+    assertRaises(rows((1L, 3L, null)), "NULL or NaN score")
+    assertRaises(rows((1L, null, 0.1)), "null id")
+    assertRaises(rows((1L, 3L, 9.1e12)), "|score| above")
+    assertRaises(rows((1L, 3L, Double.NegativeInfinity)), "|score| above")
+  }
+
+  test("a variable-width carried column is refused when the query is built") {
+    val s = spark
+    import s.implicits._
+    val rows = Seq((1L, 1L, 0.5, "a")).toDF("k", "id", "score", "txt")
+    val err = intercept[IllegalArgumentException](
+      Argmin(rows, Seq("k"), "score", "id", "spec", carry = Seq("txt")))
+    assert(err.getMessage.contains("carried column txt"), err.getMessage)
   }
 
   test("a NaN vector fails the decontam report and the PQ encode loudly") {
@@ -136,14 +148,13 @@ class ArgminSpec extends AnyFunSuite {
       assert(messages(err).exists(_.contains("semanticDecontamAdaptive: NULL or NaN cos")),
         messages(err).head)
     }
-    // unit vectors keep every finite d2 inside the encode's d2 <= 16
     val en = (0L until 8L).map(i => (i, vec(i, i == 3L))).toDF("vec_id", "v")
       .select(col("vec_id"),
         expr("transform(v, x -> x / sqrt(aggregate(v, 0d, (a, y) -> a + y * y)))").as("v"))
     val cb = Similarity.subVectors(en.filter(col("vec_id") < 2))
       .select(col("m"), col("vec_id").as("kid"), col("sv").as("kv"))
     val err = intercept[Exception](Similarity.pqEncodeWith(en, cb).collect())
-    assert(messages(err).exists(_.contains("assignCodesBounded: NULL or NaN d2")),
+    assert(messages(err).exists(_.contains("assignCodesNarrow: NULL or NaN d2")),
       messages(err).head)
   }
 }

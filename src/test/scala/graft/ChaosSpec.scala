@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Chaos, TextAnalytics}
@@ -73,8 +74,11 @@ class ChaosSpec extends AnyFunSuite {
       "retried funnel run diverged from the clean run")
   }
 
-  test("map-side task failures leave word count byte-identical") {
-    val docs = TextAnalytics.documents(spark, corpus).repartition(8)
+  /** Word count over `docs` in 8 partitions, every map task failing
+    * its first attempt, equals the clean run line for line.
+    */
+  private def mapSideChaos(docs0: DataFrame): Unit = {
+    val docs = docs0.repartition(8)
     val clean = TextAnalytics.toOutputLines(
       TextAnalytics.wordCount(docs)).collect()
     val (chaos, failed) = countingFailures {
@@ -84,6 +88,14 @@ class ChaosSpec extends AnyFunSuite {
     assert(failed >= 8, s"chaos must actually fail the 8 map tasks, saw $failed")
     assert(chaos.length == clean.length)
     assert(chaos.sameElements(clean), "retried run diverged from clean run")
+  }
+
+  test("map-side task failures leave word count byte-identical") {
+    mapSideChaos(TextAnalytics.documents(spark, corpus))
+  }
+
+  test("map-side task failures leave word count byte-identical on the fixture corpus") {
+    mapSideChaos(ReferenceData.fixtureDocs(spark))
   }
 
   test("reduce-side task failures leave a shuffle query identical") {
@@ -114,13 +126,24 @@ class ChaosSpec extends AnyFunSuite {
       "retried pagerank run diverged from the clean run")
   }
 
-  test("stalled first attempts (speculation's target shape) stay correct") {
+  /** Word count over `docs` in 8 partitions, every first attempt
+    * stalled for a second, equals the clean run.
+    */
+  private def stalledChaos(docs0: DataFrame): Unit = {
     assert(spark.conf.get("spark.speculation") == "true")
-    val docs = TextAnalytics.documents(spark, corpus).repartition(8)
+    val docs = docs0.repartition(8)
     val clean = TextAnalytics.wordCount(docs)
       .orderBy("word").collect()
     val stalled = TextAnalytics.wordCount(
       Chaos.stallFirstAttempt(docs, 1000L)).orderBy("word").collect()
     assert(stalled.toSeq == clean.toSeq)
+  }
+
+  test("stalled first attempts (speculation's target shape) stay correct") {
+    stalledChaos(TextAnalytics.documents(spark, corpus))
+  }
+
+  test("stalled first attempts stay correct on the fixture corpus") {
+    stalledChaos(ReferenceData.fixtureDocs(spark))
   }
 }

@@ -45,10 +45,23 @@ class ClusterPuritySpec extends AnyFunSuite {
     def run(lbl: (Long, java.lang.Long)*) =
       Similarity.clusterPurityOf(vecs,
         lbl.toDF("vec_id", "label")).collect()
-    // out-of-range label on a vec_id that JOINS → loud failure
-    val e1 = intercept[Exception](
-      run(0L -> 1L, 1L -> 1L, 2L -> 1L, 3L -> 1000000L))
-    assert(e1.getMessage.contains("outside packed range"), e1.getMessage)
+    // any label value ranks: the majority is the window reference's
+    // row_number() over (order by n desc, label) = 1 among the
+    // labels that join (identical vectors, so one cluster)
+    def reference(lbl: (Long, java.lang.Long)*): (Int, Long) = {
+      val joined = lbl.filter(_._1 < 4L).map(_._2.longValue)
+      val (label, n) = joined.groupBy(identity).view.mapValues(_.size.toLong)
+        .toSeq.minBy { case (l, c) => (-c, l) }
+      (label.toInt, n)
+    }
+    for (lbl <- Seq(
+        Seq[(Long, java.lang.Long)](0L -> 1L, 1L -> 1L, 2L -> 1L, 3L -> 1000000L),
+        Seq[(Long, java.lang.Long)](0L -> 1000000L, 1L -> 1000000L, 2L -> -1L, 3L -> -1L),
+        Seq[(Long, java.lang.Long)](0L -> 1000000L, 1L -> 1000000L, 2L -> -1L, 3L -> 5L))) {
+      val got = run(lbl: _*)
+      assert(got.length == 1 && got(0).getLong(1) == 4L)
+      assert((got(0).getInt(2), got(0).getLong(3)) == reference(lbl: _*), lbl)
+    }
     // null label on a joined vec_id → its own message, not
     // a null-concatenated one
     val e2 = intercept[Exception](run(0L -> 1L, 1L -> null, 2L -> 1L, 3L -> 1L))

@@ -8,7 +8,7 @@ import graft.operators.TextPipeline
   * independently in plain Scala (same bucket/JSD/integerization
   * formulas, different execution path), exact row equality asserted —
   * including the zero-P buckets that only contribute through the
-  * mixture M and the packed-key top-bucket tiebreak.
+  * mixture M and the top-bucket tiebreak.
   */
 class DriftSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark

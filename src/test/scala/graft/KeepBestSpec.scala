@@ -5,7 +5,7 @@ import graft.operators.Dedup
 
 /** Pins for the component keep-best argmax: longest member wins, ties
   * go to the lowest doc_id, singleton components keep themselves, and
-  * the packed-encoding range guard fails loudly outside its envelope.
+  * no length or doc_id range is special.
   */
 class KeepBestSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -40,12 +40,14 @@ class KeepBestSpec extends AnyFunSuite {
     assert(got.getLong(2) == 0L && got.getLong(3) == (1L << 20) - 1)
   }
 
-  test("range guard fails loudly on an oversized document") {
+  test("lengths of 2^20 and more and doc_ids beyond 2^42 rank like any other") {
+    val u = 1L << 42
     val (comp, docs) = frames(
-      comp = Seq((1L, 1L)), docs = Seq((1L, 1L << 20)))
-    val e = intercept[Exception] {
-      Dedup.keepBestOf(comp, docs).collect()
-    }
-    assert(e.getMessage.contains("keepBest"))
+      comp = Seq((1L, 1L), (u + 5, 1L), (u + 9, 1L), (2L, 2L)),
+      docs = Seq((1L, 1L << 20), (u + 5, 1L << 40), (u + 9, 1L << 40),
+                 (2L, Long.MaxValue)))
+    val got = Dedup.keepBestOf(comp, docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(got.toSeq == Seq((1L, 3L, u + 5, 1L << 40), (2L, 1L, 2L, Long.MaxValue)))
   }
 }

@@ -49,8 +49,7 @@ class NormalizeTextSpec extends AnyFunSuite {
   }
 
   test("agrees with the regex path on the fixture corpus") {
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-      .select(col("text"))
+    val docs = ReferenceData.fixtureDocs(spark).select(col("text"))
     val diff = docs.select(col("text"),
         normalize_text(col("text")).as("fast"),
         regexNorm(col("text")).as("slow"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
@@ -208,14 +208,19 @@ class PlanContractSpec extends AnyFunSuite {
       "ann_ivf_pq_res_idx", "ann_cluster_purity", "smp_decontam_sem",
       "smp_decontam_sem_ivf", "smp_cluster_temp", "dedup_semantic",
       "dedup_semantic_capped", "sim_near_dup", "sim_near_dup_lsh",
-      "dedup_keep_best", "dedup_keep_best_idx", "pipe_drift")
+      "dedup_keep_best", "dedup_keep_best_idx", "pipe_drift",
+      "smp_shuffle_shards")
     val sortAggs = converted.map { q =>
       val plan = unwrap(SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan)
       // a string buffer (the near-dup collapse prepass's max(text)
-      // exemplar) is the one SortAggregate source that is not an argmin
+      // exemplar) is the one SortAggregate source that is not an argmin;
+      // the argmin itself never joins its winners back on the rank
       q -> plan.collect {
         case a: SortAggregateExec if !a.output.exists(_.dataType == StringType) =>
           a.output.map(_.name)
+        case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys).exists(_.references
+            .exists(_.name == "__rank")) =>
+          Seq(s"join on __rank: ${j.nodeName}")
       }
     }.filter(_._2.nonEmpty)
     assert(sortAggs.isEmpty, sortAggs.mkString("\n"))

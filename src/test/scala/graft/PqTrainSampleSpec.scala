@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.CrossEngine.pround
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
 
@@ -43,20 +45,28 @@ class PqTrainSampleSpec extends AnyFunSuite {
       cbRows(Similarity.trainPqCodebooks(perturbed)))
   }
 
-  // the encode runs Argmin's packed form and training its unbounded
-  // two-pass form: they must agree wherever the encode's range
-  // contract (unit-normalized input, d2 <= 16) holds — including the
-  // micro-rounded-tie / lowest-kid tiebreak behavior
-  test("bounded encode argmin equals the unbounded training argmin on normalized vectors") {
+  // training and the corpus encode share assignCodesNarrow; on
+  // normalized vectors it must keep exactly the window reference's
+  // row: nearest codeword by pround(d2, 6), ties to the lowest kid
+  test("the encode argmin equals the window reference on normalized vectors") {
     val en = corpus(2048).select(col("vec_id"),
       expr("transform(v, x -> x / sqrt(aggregate(v, 0.0d, (a, y) -> a + y * y)))")
         .as("v"))
     val cb = Similarity.trainPqCodebooks(en)
     val sub = Similarity.subVectors(en)
-    val bounded = Similarity.assignCodesBounded(sub, cb)
+    val encoded = Similarity.assignCodesNarrow(sub, cb)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val unbounded = Similarity.assignCodesNarrow(sub, cb)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(bounded.nonEmpty && bounded === unbounded)
+    // the engine's expansion |sv|² − 2·sv·kv + |kv|², so both sides
+    // micro-round the same doubles
+    val dot = graft.functions.DotProduct.dot_product _
+    val d2 = dot(col("sv"), col("sv")) - lit(2.0) * dot(col("sv"), col("kv")) +
+      dot(col("kv"), col("kv"))
+    val w = Window.partitionBy(col("vec_id"), col("m"))
+      .orderBy(pround(d2, 6), col("kid"))
+    val reference = sub.join(cb, Seq("m"))
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("m"), r.getAs[Long]("kid")))
+      .toSet
+    assert(encoded.nonEmpty && encoded === reference)
   }
 }

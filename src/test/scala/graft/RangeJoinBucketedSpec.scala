@@ -9,7 +9,7 @@ import graft.operators.Relational
   * clicks exactly on the window edges — while actually planning the
   * (user, bucket) equi key that bounds its candidate space.
   */
-class RangeJoinBucketedSpec extends AnyFunSuite {
+class RangeJoinBucketedSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
@@ -41,7 +41,7 @@ class RangeJoinBucketedSpec extends AnyFunSuite {
       // a different user's click inside the window must not count
       (7L, ts(-5), 8L, "click", 0.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft_rjb").toString
+    val dir = tempDir("graft_rjb")
     rows.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = Relational.q27RangeJoinBucketed(spark, dir).collect()
     assert(got.length == 1)

@@ -15,23 +15,11 @@ import graft.streaming.StreamingAnnIndex
   * metrics must flag a shifted stream and reset after [[retrain]];
   * and a replayed micro-batch must be idempotent.
   */
-class StreamingAnnIndexSpec extends AnyFunSuite {
+class StreamingAnnIndexSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
-  private val made = scala.collection.mutable.Buffer[java.io.File]()
-
-  private def tmp(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_sann_$tag").toFile
-    made += d
-    d.toString
-  }
-
-  // every directory a test made is removed recursively when it ends,
-  // pass or fail (deleteOnExit never removes a non-empty directory)
-  override def withFixture(test: NoArgTest) =
-    try super.withFixture(test)
-    finally { made.foreach(org.apache.commons.io.FileUtils.deleteQuietly); made.clear() }
+  private def tmp(tag: String): String = tempDir(s"graft_sann_$tag")
 
   private def rawOf(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("embedding"))

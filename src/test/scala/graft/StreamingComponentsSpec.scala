@@ -12,15 +12,11 @@ import graft.streaming.StreamingComponents
   * across them — while its persisted state stays rep-level and
   * text-free, and a replayed batch is idempotent.
   */
-class StreamingComponentsSpec extends AnyFunSuite {
+class StreamingComponentsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
-  private def tmp(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_scomp_$tag")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmp(tag: String): String = tempDir(s"graft_scomp_$tag")
 
   private def labelSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
     import spark.implicits._

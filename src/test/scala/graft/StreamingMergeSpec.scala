@@ -11,15 +11,11 @@ import graft.streaming.StreamingMerge
   * and a replayed micro-batch must rewrite its version with
   * identical rows instead of double-applying its deltas.
   */
-class StreamingMergeSpec extends AnyFunSuite {
+class StreamingMergeSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
-  private def tmp(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_smerge_$tag")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmp(tag: String): String = tempDir(s"graft_smerge_$tag")
 
   private def rowSet(df: org.apache.spark.sql.DataFrame): Set[(Long, String, Long)] = {
     import spark.implicits._

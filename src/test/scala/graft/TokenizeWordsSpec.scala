@@ -48,8 +48,7 @@ class TokenizeWordsSpec extends AnyFunSuite {
   }
 
   test("agrees with the regex path on the fixture corpus") {
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-      .select(col("text"))
+    val docs = ReferenceData.fixtureDocs(spark).select(col("text"))
     val diff = docs.select(col("text"),
         tokenize_words(col("text")).as("fast"),
         regexTokens(col("text")).as("slow"))
